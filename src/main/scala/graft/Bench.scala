@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.Entry
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -22,8 +24,50 @@ import org.apache.spark.sql.SparkSession
   * round 8's tail carried only the cold map, which is exactly the number
   * contention corrupts), with the cold total preserved in the final
   * bench_summary line and all three full maps in target/bench_times.json.
+  *
+  * A query that throws in any pass is not timed: it is left out of every
+  * per-query map and total, listed under `failed` in bench_summary, and
+  * makes the run exit non-zero — a crash must never read as a fast query.
   */
 object Bench {
+
+  /** One completed query of a pass: wall seconds, the streaming
+    * [startup sec, data sec, micro-batches] it drove, and the seconds it
+    * spent in external (non-Spark) staging writes.
+    */
+  final case class Timing(name: String, sec: Double,
+                          stream: (Double, Double, Long), externalSec: Double)
+
+  /** One pass over the catalog: timings of the queries that completed, in
+    * entry order, and the names of those that threw.
+    */
+  final case class Pass(timings: Seq[Timing], failed: Seq[String])
+
+  def runPass(spark: SparkSession, sfDir: String, entries: Seq[Entry]): Pass = {
+    val (timings, failed) = entries.partitionMap { e =>
+      val sm0 = graft.streaming.StreamMetrics.snapshot
+      val xm0 = graft.etl.StageMetrics.snapshot
+      val t0 = System.nanoTime()
+      val ok =
+        try { e.run(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
+        catch {
+          case t: Throwable =>
+            System.err.println(s"[bench] ${e.name} failed: ${t.getMessage}")
+            false
+        }
+      val dt = (System.nanoTime() - t0) / 1e9
+      val sm1 = graft.streaming.StreamMetrics.snapshot
+      val xw = (graft.etl.StageMetrics.snapshot - xm0) / 1000.0
+      // defensive: no operator caches anymore (round 2), but any future one
+      // must not bill its memory to later queries
+      spark.catalog.clearCache()
+      if (ok) Left(Timing(e.name, dt,
+        ((sm1._1 - sm0._1) / 1000.0, (sm1._2 - sm0._2) / 1000.0, sm1._3 - sm0._3), xw))
+      else Right(e.name)
+    }
+    Pass(timings, failed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -63,43 +107,8 @@ object Bench {
     // queries — for targeted scale rehearsals; unset = the full catalog.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Streaming startup-vs-data split (round-12 verdict item 6): the
-    // streaming harness meters every drive-to-completion into
-    // StreamMetrics; snapshotting the cumulative counters around each query
-    // attributes (startup sec, data sec, micro-batches) per catalog entry.
-    // Per query the pass with the smaller streaming wall wins — the same
-    // min-across-passes de-noising rule as the headline times.
-    val streamSplit = scala.collection.mutable.Map[String, (Double, Double, Long)]()
-    // per-query [external staging write, Spark remainder] — queries that
-    // stage through a non-Spark engine (q146's Derby) record the write in
-    // StageMetrics; min-total pass wins, same de-noising as streamSplit
-    val externalSplit = scala.collection.mutable.Map[String, (Double, Double)]()
-    def runPass(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-        val sm0 = graft.streaming.StreamMetrics.snapshot
-        val xm0 = graft.etl.StageMetrics.snapshot
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val sm1 = graft.streaming.StreamMetrics.snapshot
-        val (su, da, nb) =
-          ((sm1._1 - sm0._1) / 1000.0, (sm1._2 - sm0._2) / 1000.0, sm1._3 - sm0._3)
-        if (nb > 0 && streamSplit.get(name).forall { case (s0, d0, _) => su + da < s0 + d0 })
-          streamSplit(name) = (su, da, nb)
-        val xw = (graft.etl.StageMetrics.snapshot - xm0) / 1000.0
-        if (xw > 0 && externalSplit.get(name).forall { case (w0, r0) => dt < w0 + r0 })
-          externalSplit(name) = (xw, math.max(0.0, dt - xw))
-        // defensive: no operator caches anymore (round 2), but any future one
-        // must not bill its memory to later queries
-        spark.catalog.clearCache()
-        name -> dt
-      }
+    val entries = SparkEntry.entries.sortBy(_.name)
+      .filter(e => only.forall(_.contains(e.name)))
 
     // The driver tail-captures a bounded amount of stdout; each JSON line
     // must fit entirely inside that bound or the earliest per-query times
@@ -120,8 +129,14 @@ object Bench {
       s"""{"queries":$qs,"sf":"$sfDir","metric":"$metric","unit":"sec","value":${ms(results.map(_._2).sum)}}"""
     }
 
-    val cold = runPass()
-    val warm = if (warmPass) Some(runPass()) else None
+    val passes = Seq(runPass(spark, sfDir, entries)) ++
+      (if (warmPass) Seq(runPass(spark, sfDir, entries)) else Nil)
+    // a query that threw in either pass is left out of BOTH, so the cold,
+    // warm and min totals always sum the same query set
+    val failed = passes.flatMap(_.failed).distinct.sorted
+    val timed = passes.map(_.timings.filterNot(t => failed.contains(t.name)))
+    val cold = timed.head.map(t => t.name -> t.sec)
+    val warm = timed.lift(1).map(_.map(t => t.name -> t.sec))
     // Per-query MIN across passes — the de-noised measurement of record
     // (round 6's driver cold pass read 2× its own warm pass purely from
     // host contention: q232 77 s driver-cold vs 1.4 s local, q23/q24
@@ -132,6 +147,22 @@ object Bench {
       val wm = w.toMap
       cold.map { case (n, c) => n -> math.min(c, wm.getOrElse(n, c)) }
     }
+    // Streaming startup-vs-data split (round-12 verdict item 6): the
+    // streaming harness meters every drive-to-completion into
+    // StreamMetrics; snapshotting the cumulative counters around each query
+    // attributes (startup sec, data sec, micro-batches) per catalog entry.
+    // Per query the pass with the smaller streaming wall wins — the same
+    // min-across-passes de-noising rule as the headline times.
+    val streamSplit = timed.flatten.filter(_.stream._3 > 0).groupBy(_.name)
+      .map { case (n, ts) => n -> ts.minBy(t => t.stream._1 + t.stream._2).stream }
+    // per-query [external staging write, Spark remainder] — queries that
+    // stage through a non-Spark engine (q146's Derby) record the write in
+    // StageMetrics; min-total pass wins, same de-noising as streamSplit
+    val externalSplit = timed.flatten.filter(_.externalSec > 0).groupBy(_.name)
+      .map { case (n, ts) =>
+        val t = ts.minBy(_.sec)
+        n -> (t.externalSec, math.max(0.0, t.sec - t.externalSec))
+      }
     // Line order (round 9): the driver tail-captures the END of stdout, so
     // the LAST full-map line wins truncation. The round-8 tail carried only
     // the cold map — exactly the noisy number — leaving the judge unable to
@@ -191,7 +222,8 @@ object Bench {
     val streamStartup = streamSplit.values.map(_._1).sum
     val streamData = streamSplit.values.map(_._2).sum
     val canaryEnd = canary()
-    val summary = s"""{"metric":"bench_summary","n_queries":${cold.size},"total_warm":$warmTotal,"total_min":$minTotal,"total_builds":${ms(builds)},"total_probes":${ms(probes)},"stream_startup":${ms(streamStartup)},"stream_data":${ms(streamData)},"canary_start":${ms(canaryStart)},"canary_end":${ms(canaryEnd)},"total":${ms(cold.map(_._2).sum)}}"""
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    val summary = s"""{"metric":"bench_summary","n_queries":${cold.size},"failed":$failedJson,"total_warm":$warmTotal,"total_min":$minTotal,"total_builds":${ms(builds)},"total_probes":${ms(probes)},"stream_startup":${ms(streamStartup)},"stream_data":${ms(streamData)},"canary_start":${ms(canaryStart)},"canary_end":${ms(canaryEnd)},"total":${ms(cold.map(_._2).sum)}}"""
     println(summary)
     // bench_summary also lands in the file record (round-16 ADVICE: the
     // committed BENCH_LOCAL_r{N}.json must carry the canary contention
@@ -203,5 +235,9 @@ object Bench {
       System.err.println(s"[bench] could not append bench_summary: ${e.getMessage}")
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

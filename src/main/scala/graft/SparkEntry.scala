@@ -1,19 +1,20 @@
 package graft
 
+import graft.core.Entry
 import graft.operators._
 import graft.streaming.StreamingOps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Catalog contract — see SURVEY.md §7.
   *
-  * `queries` is the engine's operator inventory (SURVEY.md §2): one entry per
-  * operator family, assembled from the per-module catalogs; `oracleSql` pairs
-  * each SQL-expressible entry with ANSI SQL the driver runs in DuckDB over
-  * the same parquet tables. Hash-valued / nondeterministic operators
-  * (MinHash, SimHash, LSH, raw encryption, stateful streaming) have no
-  * oracle entry and get the driver's rows-only check; their semantics are
-  * pinned in ScalaTest instead.
+  * `queries` is the engine's operator inventory (SURVEY.md §2) and
+  * `oracleSql` pairs each of its names with ANSI SQL that the DuckDB
+  * oracle gate runs over the same parquet tables. Both are views of one
+  * registry, the concatenated per-module `entries`, so every query has
+  * exactly one oracle. Hash-valued and nondeterministic operators (MinHash, SimHash,
+  * LSH, encryption, streaming) have oracles too: their outputs are reduced
+  * to deterministic summaries the SQL can reproduce.
   */
 object SparkEntry {
 
@@ -21,23 +22,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q01PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Scalars.queries ++ EventTime.queries ++
-      EtlQueries.queries ++ Dedup.queries ++ Similarity.queries ++
-      TextAnalysis.queries ++ Multimodal.queries ++ StreamingOps.queries ++
-      Curation.queries ++ Temporal.queries ++ Sampling.queries ++
-      Profiling.queries ++ Linkage.queries ++ Skew.queries ++ Cdc.queries ++
-      EventAnalytics.queries
+  /** Every module's registry; names are unique across it (OperatorsSpec). */
+  def entries: Seq[Entry] =
+    Relational.entries ++ Scalars.entries ++ EventTime.entries ++
+      EtlQueries.entries ++ Dedup.entries ++ Similarity.entries ++
+      TextAnalysis.entries ++ Multimodal.entries ++ StreamingOps.entries ++
+      Curation.entries ++ Temporal.entries ++ Sampling.entries ++
+      Profiling.entries ++ Linkage.entries ++ Skew.entries ++ Cdc.entries ++
+      EventAnalytics.entries
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
-    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.run).toMap
+
   def oracleSql: Map[String, String] =
-    Relational.oracles ++ Scalars.oracles ++ EventTime.oracles ++
-      EtlQueries.oracles ++ Dedup.oracles ++ Similarity.oracles ++
-      TextAnalysis.oracles ++ Multimodal.oracles ++ StreamingOps.oracles ++
-      Curation.oracles ++ Temporal.oracles ++ Sampling.oracles ++
-      Profiling.oracles ++ Linkage.oracles ++ Skew.oracles ++ Cdc.oracles ++
-      EventAnalytics.oracles
+    entries.map(e => e.name -> e.oracle).toMap
 }

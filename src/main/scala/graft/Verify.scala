@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Each query's
+  * output dir is deleted before it runs, and any failure makes the run
+  * exit non-zero after naming every failed query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -14,16 +16,20 @@ object Verify {
     val spark = graft.core.SparkConfigs.localSession("graft-verify", cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith))
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val selected = SparkEntry.entries.filter(e => only.forall(_.exists(e.name.startsWith)))
+    val failed = selected.flatMap { e =>
+      val out = Paths.get(outDir, e.name)
+      // an output left by an earlier run must not pass the oracle for a
+      // query that throws now
+      if (Files.exists(out)) graft.core.Scratch.deleteRecursively(out)
+      val ok =
+        try { e.run(spark, sfDir).coalesce(1).write.parquet(out.toString); true }
+        catch { case t: Throwable =>
+          System.err.println(s"[verify] ${e.name} failed: ${t.getMessage}")
+          false
+        }
       spark.catalog.clearCache() // no query's scratch may outlive it
+      if (ok) None else Some(e.name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -41,5 +47,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${selected.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

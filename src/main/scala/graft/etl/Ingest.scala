@@ -37,13 +37,17 @@ final case class IngestResult(url: String, table: String, rows: Long)
   */
 object Ingest extends Logging {
 
-  /** Dispatch on file extension. CSV is the reference's actual format; XLSX
-    * is claimed in its README (README.md:69) but its code feeds any URL to
-    * the CSV parser (pd.read_csv, pipeline.py:205) — SURVEY.md §0.1. Round
-    * 7 closes the claim: .xlsx routes to [[Xlsx.read]] (java.util.zip +
-    * the Spark 4 XML source over the public OOXML layout — no spreadsheet
-    * library). Legacy binary .xls (BIFF) stays unsupported — a different,
-    * non-XML format the reference never names.
+  /** Read one file with whole-input schema inference, optionally
+    * Fernet-encrypt its sensitive columns, and save it as `source`.`table`.
+    *
+    * Only the reader depends on the extension. CSV is the reference's
+    * actual format; XLSX is claimed in its README (README.md:69) but its
+    * code feeds any URL to the CSV parser (pd.read_csv, pipeline.py:205) —
+    * SURVEY.md §0.1. Round 7 closes the claim: .xlsx routes to
+    * [[Xlsx.read]] (java.util.zip + the Spark 4 XML source over the public
+    * OOXML layout — no spreadsheet library). Legacy binary .xls (BIFF)
+    * stays unsupported — a different, non-XML format the reference never
+    * names.
     */
   def ingestFile(spark: SparkSession, path: String, source: String,
                  options: IngestOptions = IngestOptions(),
@@ -53,47 +57,16 @@ object Ingest extends Logging {
     if (lower.endsWith(".xls"))
       throw new UnsupportedOperationException(
         s"legacy binary .xls (BIFF) is not supported — convert to .xlsx: $path")
-    else if (lower.endsWith(".xlsx"))
-      ingestXlsx(spark, path, source, options, encryptionKey, mode)
-    else ingestCsv(spark, path, source, options, encryptionKey, mode)
-  }
-
-  /** XLSX twin of [[ingestCsv]]: [[Xlsx.read]] does the parse + whole-table
-    * typing; encryption and warehouse namespace-qualification are shared.
-    */
-  def ingestXlsx(spark: SparkSession, path: String, source: String,
-                 options: IngestOptions = IngestOptions(),
-                 encryptionKey: Option[String] = None,
-                 mode: SaveMode = SaveMode.Overwrite): IngestResult = {
-    val fileName = Paths.get(path).getFileName.toString
-    val table = options.tableName.getOrElse(Utils.sanitizeTableName(fileName))
-    require(table.nonEmpty, s"Cannot derive a table name from $fileName")
-    val raw = Xlsx.read(spark, path)
-    val df =
-      if (options.anonymize && options.sensitiveColumns.nonEmpty) {
-        val key = encryptionKey.getOrElse(graft.crypto.Fernet.generateKey())
-        CryptoFunctions.encryptColumns(raw, options.sensitiveColumns, key)
-      } else raw
-    val qualified = saveToWarehouse(spark, df, source, table, mode)
-    IngestResult(path, qualified, spark.table(qualified).count())
-  }
-
-  /** Read a CSV with whole-file schema inference, optionally Fernet-encrypt
-    * sensitive columns, and save as `source`.`table`.
-    * Returns the qualified table name.
-    */
-  def ingestCsv(spark: SparkSession, path: String, source: String,
-                options: IngestOptions = IngestOptions(),
-                encryptionKey: Option[String] = None,
-                mode: SaveMode = SaveMode.Overwrite): IngestResult = {
     val fileName = Paths.get(path).getFileName.toString
     val table = options.tableName.getOrElse(Utils.sanitizeTableName(fileName))
     require(table.nonEmpty, s"Cannot derive a table name from $fileName")
 
-    val raw = spark.read
-      .option("header", options.header.toString)
-      .option("inferSchema", "true") // single pass over the whole input
-      .csv(path)
+    val raw =
+      if (lower.endsWith(".xlsx")) Xlsx.read(spark, path)
+      else spark.read
+        .option("header", options.header.toString)
+        .option("inferSchema", "true") // single pass over the whole input
+        .csv(path)
 
     val df =
       if (options.anonymize && options.sensitiveColumns.nonEmpty) {
@@ -148,12 +121,17 @@ object Ingest extends Logging {
               .copy(url = url)
           }
         }
-        futures.map(f => Try(Await.result(f, Duration.Inf)))
+        // a failure's message starts with the input it belongs to
+        urls.zip(futures).map { case (url, f) =>
+          Try(Await.result(f, Duration.Inf)).recoverWith { case e =>
+            Failure(new RuntimeException(s"$url: ${e.getMessage}", e))
+          }
+        }
       } finally {
         pool.shutdown()
         // staged downloads are only scratch input — the data now lives in the
         // warehouse table — so reclaim the disk before returning
-        deleteRecursively(stage)
+        graft.core.Scratch.deleteRecursively(stage)
       }
     results.foreach {
       case Success(r) => logInfo(s"Ingested ${r.url} -> ${r.table} (${r.rows} rows)")
@@ -161,13 +139,4 @@ object Ingest extends Logging {
     }
     results
   }
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(root) // must be closed: holds directory handles
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => Try(Files.deleteIfExists(p)))
-      finally walk.close()
-    }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -324,15 +325,9 @@ object Cdc {
        FROM n
        ORDER BY asof_date"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q102_snapshot_diff" -> q102SnapshotDiff _,
-    "q112_incremental_agg" -> q112IncrementalAgg _,
-    "q126_scd2_history" -> q126Scd2 _,
-    "q219_point_in_time" -> q219PointInTime _)
-
-  val oracles: Map[String, String] = Map(
-    "q102_snapshot_diff" -> q102Oracle,
-    "q112_incremental_agg" -> q112Oracle,
-    "q126_scd2_history" -> q126Oracle,
-    "q219_point_in_time" -> q219Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q102_snapshot_diff", q102SnapshotDiff, q102Oracle),
+    Entry("q112_incremental_agg", q112IncrementalAgg, q112Oracle),
+    Entry("q126_scd2_history", q126Scd2, q126Oracle),
+    Entry("q219_point_in_time", q219PointInTime, q219Oracle))
 }

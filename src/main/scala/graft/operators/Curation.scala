@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -1452,43 +1453,23 @@ object Curation {
        FROM pairs LEFT JOIN p ON p.sa = pairs.sa AND p.sb = pairs.sb
        ORDER BY pairs.sa, pairs.sb"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q409_weighted_jaccard" -> q409WeightedJaccard _,
-    "q368_coverage_selection" -> q368CoverageSelection _,
-    "q366_selection_parity" -> q366SelectionParity _,
-    "q350_domain_reweight" -> q350DomainReweight _,
-    "q310_bucket_batching" -> q310BucketBatching _,
-    "q283_substring_curation" -> q283SubstringCuration _,
-    "q275_packing_efficiency" -> q275PackingEfficiency _,
-    "q231_curation_capstone" -> q231CurationCapstone _,
-    "q247_rejection_attribution" -> q247RejectionAttribution _,
-    "q254_epoch_plan" -> q254EpochPlan _,
-    "q198_quantile_normalize" -> q198QuantileNormalize _,
-    "q180_length_decile_mix" -> q180LengthDecileMix _,
-    "q150_training_pipeline" -> q150TrainingPipeline _,
-    "q122_url_canonicalize" -> q122UrlCanonicalize _,
-    "q118_sequence_packing" -> q118SequencePacking _,
-    "q119_corpus_mix" -> q119CorpusMix _,
-    "q169_group_split" -> q169GroupSplit _,
-    "q69_curation_pipeline" -> q69CurationPipeline _)
-
-  val oracles: Map[String, String] = Map(
-    "q409_weighted_jaccard" -> q409Oracle,
-    "q368_coverage_selection" -> q368Oracle,
-    "q366_selection_parity" -> q366Oracle,
-    "q350_domain_reweight" -> q350Oracle,
-    "q310_bucket_batching" -> q310Oracle,
-    "q283_substring_curation" -> q283Oracle,
-    "q275_packing_efficiency" -> q275Oracle,
-    "q231_curation_capstone" -> q231Oracle,
-    "q247_rejection_attribution" -> q247Oracle,
-    "q254_epoch_plan" -> q254Oracle,
-    "q198_quantile_normalize" -> q198Oracle,
-    "q180_length_decile_mix" -> q180Oracle,
-    "q150_training_pipeline" -> q150Oracle,
-    "q122_url_canonicalize" -> q122Oracle,
-    "q118_sequence_packing" -> q118Oracle,
-    "q119_corpus_mix" -> q119Oracle,
-    "q169_group_split" -> q169Oracle,
-    "q69_curation_pipeline" -> q69Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q409_weighted_jaccard", q409WeightedJaccard, q409Oracle),
+    Entry("q368_coverage_selection", q368CoverageSelection, q368Oracle),
+    Entry("q366_selection_parity", q366SelectionParity, q366Oracle),
+    Entry("q350_domain_reweight", q350DomainReweight, q350Oracle),
+    Entry("q310_bucket_batching", q310BucketBatching, q310Oracle),
+    Entry("q283_substring_curation", q283SubstringCuration, q283Oracle),
+    Entry("q275_packing_efficiency", q275PackingEfficiency, q275Oracle),
+    Entry("q231_curation_capstone", q231CurationCapstone, q231Oracle),
+    Entry("q247_rejection_attribution", q247RejectionAttribution, q247Oracle),
+    Entry("q254_epoch_plan", q254EpochPlan, q254Oracle),
+    Entry("q198_quantile_normalize", q198QuantileNormalize, q198Oracle),
+    Entry("q180_length_decile_mix", q180LengthDecileMix, q180Oracle),
+    Entry("q150_training_pipeline", q150TrainingPipeline, q150Oracle),
+    Entry("q122_url_canonicalize", q122UrlCanonicalize, q122Oracle),
+    Entry("q118_sequence_packing", q118SequencePacking, q118Oracle),
+    Entry("q119_corpus_mix", q119CorpusMix, q119Oracle),
+    Entry("q169_group_split", q169GroupSplit, q169Oracle),
+    Entry("q69_curation_pipeline", q69CurationPipeline, q69Oracle))
 }

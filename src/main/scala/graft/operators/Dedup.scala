@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -2130,8 +2131,8 @@ object Dedup {
       .select(col("doc_id").as("ref_id"), col("sh"))
     // hit counts ride the per-hash df SUMMARY (1 row per hash — immune
     // to a universal-boilerplate hot fingerprint by construction;
-    // SkewBenchWinnow measures the raw join growing linearly with corpus
-    // size while this leg stays flat). Σ df equals the raw pair count.
+    // SCALE.md's winnow rehearsal measured the raw join growing linearly
+    // with corpus size while this leg stays flat). Σ df equals the raw pair count.
     // Only the distinct-ref ATTRIBUTION leg joins raw index rows — at
     // 100 TB that leg joins a capped per-hash ref list with a driven
     // overflow report (the q223/q224 MaxBucketSize discipline).
@@ -2519,69 +2520,36 @@ object Dedup {
         .distinct()
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q358_bloom_fpr_audit" -> q358BloomFprAudit _,
-    "q328_dedup_funnel" -> q328DedupFunnel _,
-    "q316_build_winnow_index" -> q316BuildWinnowIndex _,
-    "q317_winnow_admission" -> q317WinnowAdmission _,
-    "q305_winnowing" -> q305Winnowing _,
-    "q296_substring_admission" -> q296SubstringAdmission _,
-    "q295_build_gram_df" -> q295BuildGramDf _,
-    "q294_snapshot_dup_flow" -> q294SnapshotDupFlow _,
-    "q293_cluster_token_savings" -> q293ClusterTokenSavings _,
-    "q289_cluster_purity" -> q289ClusterPurity _,
-    "q282_lsh_planner" -> q282LshPlanner _,
-    "q270_substring_dedup" -> q270SubstringDedup _,
-    "q263_dedup_savings" -> q263DedupSavings _,
-    "q242_incremental_clusters" -> q242IncrementalClusters _,
-    "q240_build_band_index" -> q240BuildBandIndex _,
-    "q239_incremental_neardup" -> q239IncrementalNearDup _,
-    "q234_build_cluster_table" -> q234BuildClusterTable _,
-    "q233_fingerprint_bit_balance" -> q233FingerprintBitBalance _,
-    "q232_cluster_size_histogram" -> q232ClusterSizeHistogram _,
-    "q223_minhash_overflow_report" -> q223MinhashOverflowReport _,
-    "q162_dedup_survivorship" -> q162DedupSurvivorship _,
-    "q157_containment_join" -> q157ContainmentJoin _,
-    "q140_prefix_filter_join" -> q140PrefixFilterJoin _,
-    "q30_dedup_exact" -> q30ExactDedup _,
-    "q31_dedup_minhash_lsh" -> q31MinhashLsh _,
-    "q32_dedup_simhash" -> q32SimhashDedup _,
-    "q33_dedup_ngram_jaccard" -> q33NgramJaccard _,
-    "q83_dedup_bloom" -> q83BloomDedup _,
-    "q97_dedup_clusters" -> q97DedupClusters _,
-    "q109_star_clusters" -> q109StarClusters _,
-    "q125_crosscorpus_neardup" -> q125CrossCorpusNearDup _)
-
-  val oracles: Map[String, String] = Map(
-    "q358_bloom_fpr_audit" -> q358Oracle,
-    "q328_dedup_funnel" -> q328Oracle,
-    "q316_build_winnow_index" -> q316Oracle,
-    "q317_winnow_admission" -> q317Oracle,
-    "q305_winnowing" -> q305Oracle,
-    "q296_substring_admission" -> q296Oracle,
-    "q295_build_gram_df" -> q295Oracle,
-    "q294_snapshot_dup_flow" -> q294Oracle,
-    "q293_cluster_token_savings" -> q293Oracle,
-    "q289_cluster_purity" -> q289Oracle,
-    "q282_lsh_planner" -> q282Oracle,
-    "q270_substring_dedup" -> q270Oracle,
-    "q263_dedup_savings" -> q263Oracle,
-    "q242_incremental_clusters" -> q242Oracle,
-    "q240_build_band_index" -> q240Oracle,
-    "q239_incremental_neardup" -> q239Oracle,
-    "q234_build_cluster_table" -> q234Oracle,
-    "q233_fingerprint_bit_balance" -> q233Oracle,
-    "q232_cluster_size_histogram" -> q232Oracle,
-    "q223_minhash_overflow_report" -> q223Oracle,
-    "q162_dedup_survivorship" -> q162Oracle,
-    "q157_containment_join" -> q157Oracle,
-    "q140_prefix_filter_join" -> q140Oracle,
-    "q30_dedup_exact" -> q30Oracle,
-    "q31_dedup_minhash_lsh" -> q31Oracle,
-    "q32_dedup_simhash" -> q32Oracle,
-    "q33_dedup_ngram_jaccard" -> q33Oracle,
-    "q83_dedup_bloom" -> q83Oracle,
-    "q97_dedup_clusters" -> q97Oracle,
-    "q109_star_clusters" -> q109Oracle,
-    "q125_crosscorpus_neardup" -> q125Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q358_bloom_fpr_audit", q358BloomFprAudit, q358Oracle),
+    Entry("q328_dedup_funnel", q328DedupFunnel, q328Oracle),
+    Entry("q316_build_winnow_index", q316BuildWinnowIndex, q316Oracle),
+    Entry("q317_winnow_admission", q317WinnowAdmission, q317Oracle),
+    Entry("q305_winnowing", q305Winnowing, q305Oracle),
+    Entry("q296_substring_admission", q296SubstringAdmission, q296Oracle),
+    Entry("q295_build_gram_df", q295BuildGramDf, q295Oracle),
+    Entry("q294_snapshot_dup_flow", q294SnapshotDupFlow, q294Oracle),
+    Entry("q293_cluster_token_savings", q293ClusterTokenSavings, q293Oracle),
+    Entry("q289_cluster_purity", q289ClusterPurity, q289Oracle),
+    Entry("q282_lsh_planner", q282LshPlanner, q282Oracle),
+    Entry("q270_substring_dedup", q270SubstringDedup, q270Oracle),
+    Entry("q263_dedup_savings", q263DedupSavings, q263Oracle),
+    Entry("q242_incremental_clusters", q242IncrementalClusters, q242Oracle),
+    Entry("q240_build_band_index", q240BuildBandIndex, q240Oracle),
+    Entry("q239_incremental_neardup", q239IncrementalNearDup, q239Oracle),
+    Entry("q234_build_cluster_table", q234BuildClusterTable, q234Oracle),
+    Entry("q233_fingerprint_bit_balance", q233FingerprintBitBalance, q233Oracle),
+    Entry("q232_cluster_size_histogram", q232ClusterSizeHistogram, q232Oracle),
+    Entry("q223_minhash_overflow_report", q223MinhashOverflowReport, q223Oracle),
+    Entry("q162_dedup_survivorship", q162DedupSurvivorship, q162Oracle),
+    Entry("q157_containment_join", q157ContainmentJoin, q157Oracle),
+    Entry("q140_prefix_filter_join", q140PrefixFilterJoin, q140Oracle),
+    Entry("q30_dedup_exact", q30ExactDedup, q30Oracle),
+    Entry("q31_dedup_minhash_lsh", q31MinhashLsh, q31Oracle),
+    Entry("q32_dedup_simhash", q32SimhashDedup, q32Oracle),
+    Entry("q33_dedup_ngram_jaccard", q33NgramJaccard, q33Oracle),
+    Entry("q83_dedup_bloom", q83BloomDedup, q83Oracle),
+    Entry("q97_dedup_clusters", q97DedupClusters, q97Oracle),
+    Entry("q109_star_clusters", q109StarClusters, q109Oracle),
+    Entry("q125_crosscorpus_neardup", q125CrossCorpusNearDup, q125Oracle))
 }

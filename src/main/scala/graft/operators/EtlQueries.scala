@@ -1,6 +1,6 @@
 package graft.operators
 
-
+import graft.core.Entry
 import graft.crypto.CryptoFunctions
 import graft.sources.Tables
 
@@ -1696,81 +1696,42 @@ object EtlQueries {
        SELECT counts.cls, counts.n, cka.ck = cks.ck AS sync_exact
        FROM counts, cka, cks ORDER BY counts.cls"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q413_merge_sync" -> q413MergeSync _,
-    "q390_rendezvous_shards" -> q390RendezvousShards _,
-    "q389_hilbert_layout" -> q389HilbertLayout _,
-    "q335_zorder_layout" -> q335ZorderLayout _,
-    "q191_reconciliation" -> q191Reconciliation _,
-    "q192_key_rotation" -> q192KeyRotation _,
-    "q197_union_evolution" -> q197UnionEvolution _,
-    "q208_csv_dialect" -> q208CsvDialect _,
-    "q209_globbed_source" -> q209GlobbedSource _,
-    "q212_bucketed_agg" -> q212BucketedAgg _,
-    "q129_dpp_join" -> q129DynamicPartitionPruning _,
-    "q130_bloom_filter_join" -> q130BloomFilterJoin _,
-    "q146_jdbc_partitioned" -> q146JdbcPartitioned _,
-    "q147_bucket_pruning" -> q147BucketPruning _,
-    "q148_cdc_apply" -> q148CdcApply _,
-    "q149_parquet_agg_pushdown" -> q149ParquetAggPushdown _,
-    "q128_dynamic_overwrite" -> q128DynamicOverwrite _,
-    "q127_corrupt_records" -> q127CorruptRecords _,
-    "q116_crypto_shred" -> q116CryptoShred _,
-    "q117_schema_merge" -> q117SchemaMerge _,
-    "q115_compaction" -> q115Compaction _,
-    "q111_zorder_layout" -> q111ZorderLayout _,
-    "q26_encrypt_roundtrip" -> q26EncryptRoundtrip _,
-    "q27_encrypt_tokens" -> q27EncryptTokens _,
-    "q28_csv_ingest_roundtrip" -> q28CsvIngestRoundtrip _,
-    "q237_xlsx_ingest" -> q237XlsxIngest _,
-    "q29_sanitize_identifiers" -> q29Sanitize _,
-    "q74_jsonl_roundtrip" -> q74JsonlRoundtrip _,
-    "q75_merge_upsert" -> q75MergeUpsert _,
-    "q82_orc_roundtrip" -> q82OrcRoundtrip _,
-    "q88_sql_delete_update" -> q88SqlDeleteUpdate _,
-    "q421_alter_evolution" -> q421AlterEvolution _,
-    "q89_schema_drift" -> q89SchemaDrift _,
-    "q93_xml_roundtrip" -> q93XmlRoundtrip _,
-    "q96_jdbc_roundtrip" -> q96JdbcRoundtrip _,
-    "q100_partitioned_pruning" -> q100PartitionedPruning _,
-    "q101_bucketed_join" -> q101BucketedJoin _)
-
-  val oracles: Map[String, String] = Map(
-    "q413_merge_sync" -> q413Oracle,
-    "q390_rendezvous_shards" -> q390Oracle,
-    "q389_hilbert_layout" -> q389Oracle,
-    "q335_zorder_layout" -> q335Oracle,
-    "q191_reconciliation" -> q191Oracle,
-    "q192_key_rotation" -> q192Oracle,
-    "q197_union_evolution" -> q197Oracle,
-    "q208_csv_dialect" -> q208Oracle,
-    "q209_globbed_source" -> q209Oracle,
-    "q212_bucketed_agg" -> q212Oracle,
-    "q129_dpp_join" -> q129Oracle,
-    "q130_bloom_filter_join" -> q130Oracle,
-    "q146_jdbc_partitioned" -> q146Oracle,
-    "q147_bucket_pruning" -> q147Oracle,
-    "q148_cdc_apply" -> q148Oracle,
-    "q149_parquet_agg_pushdown" -> q149Oracle,
-    "q128_dynamic_overwrite" -> q128Oracle,
-    "q127_corrupt_records" -> q127Oracle,
-    "q27_encrypt_tokens" -> q27Oracle,
-    "q116_crypto_shred" -> q116Oracle,
-    "q117_schema_merge" -> q117Oracle,
-    "q115_compaction" -> q115Oracle,
-    "q111_zorder_layout" -> q111Oracle,
-    "q26_encrypt_roundtrip" -> q26Oracle,
-    "q28_csv_ingest_roundtrip" -> q28Oracle,
-    "q237_xlsx_ingest" -> q237Oracle,
-    "q29_sanitize_identifiers" -> q29Oracle,
-    "q74_jsonl_roundtrip" -> q74Oracle,
-    "q75_merge_upsert" -> q75Oracle,
-    "q82_orc_roundtrip" -> q82Oracle,
-    "q88_sql_delete_update" -> q88Oracle,
-    "q421_alter_evolution" -> q421Oracle,
-    "q89_schema_drift" -> q89Oracle,
-    "q93_xml_roundtrip" -> q93Oracle,
-    "q96_jdbc_roundtrip" -> q96Oracle,
-    "q100_partitioned_pruning" -> q100Oracle,
-    "q101_bucketed_join" -> q101Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q413_merge_sync", q413MergeSync, q413Oracle),
+    Entry("q390_rendezvous_shards", q390RendezvousShards, q390Oracle),
+    Entry("q389_hilbert_layout", q389HilbertLayout, q389Oracle),
+    Entry("q335_zorder_layout", q335ZorderLayout, q335Oracle),
+    Entry("q191_reconciliation", q191Reconciliation, q191Oracle),
+    Entry("q192_key_rotation", q192KeyRotation, q192Oracle),
+    Entry("q197_union_evolution", q197UnionEvolution, q197Oracle),
+    Entry("q208_csv_dialect", q208CsvDialect, q208Oracle),
+    Entry("q209_globbed_source", q209GlobbedSource, q209Oracle),
+    Entry("q212_bucketed_agg", q212BucketedAgg, q212Oracle),
+    Entry("q129_dpp_join", q129DynamicPartitionPruning, q129Oracle),
+    Entry("q130_bloom_filter_join", q130BloomFilterJoin, q130Oracle),
+    Entry("q146_jdbc_partitioned", q146JdbcPartitioned, q146Oracle),
+    Entry("q147_bucket_pruning", q147BucketPruning, q147Oracle),
+    Entry("q148_cdc_apply", q148CdcApply, q148Oracle),
+    Entry("q149_parquet_agg_pushdown", q149ParquetAggPushdown, q149Oracle),
+    Entry("q128_dynamic_overwrite", q128DynamicOverwrite, q128Oracle),
+    Entry("q127_corrupt_records", q127CorruptRecords, q127Oracle),
+    Entry("q116_crypto_shred", q116CryptoShred, q116Oracle),
+    Entry("q117_schema_merge", q117SchemaMerge, q117Oracle),
+    Entry("q115_compaction", q115Compaction, q115Oracle),
+    Entry("q111_zorder_layout", q111ZorderLayout, q111Oracle),
+    Entry("q26_encrypt_roundtrip", q26EncryptRoundtrip, q26Oracle),
+    Entry("q27_encrypt_tokens", q27EncryptTokens, q27Oracle),
+    Entry("q28_csv_ingest_roundtrip", q28CsvIngestRoundtrip, q28Oracle),
+    Entry("q237_xlsx_ingest", q237XlsxIngest, q237Oracle),
+    Entry("q29_sanitize_identifiers", q29Sanitize, q29Oracle),
+    Entry("q74_jsonl_roundtrip", q74JsonlRoundtrip, q74Oracle),
+    Entry("q75_merge_upsert", q75MergeUpsert, q75Oracle),
+    Entry("q82_orc_roundtrip", q82OrcRoundtrip, q82Oracle),
+    Entry("q88_sql_delete_update", q88SqlDeleteUpdate, q88Oracle),
+    Entry("q421_alter_evolution", q421AlterEvolution, q421Oracle),
+    Entry("q89_schema_drift", q89SchemaDrift, q89Oracle),
+    Entry("q93_xml_roundtrip", q93XmlRoundtrip, q93Oracle),
+    Entry("q96_jdbc_roundtrip", q96JdbcRoundtrip, q96Oracle),
+    Entry("q100_partitioned_pruning", q100PartitionedPruning, q100Oracle),
+    Entry("q101_bucketed_join", q101BucketedJoin, q101Oracle))
 }

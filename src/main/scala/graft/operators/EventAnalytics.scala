@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -3295,113 +3296,58 @@ object EventAnalytics {
        FROM terms m, tot t, tts x, sums s
        ORDER BY m.nat"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q400_theil_decomposition" -> q400TheilDecomposition _,
-    "q405_kruskal_wallis" -> q405KruskalWallis _,
-    "q407_allen_census" -> q407AllenCensus _,
-    "q414_acf_spectrum" -> q414AcfSpectrum _,
-    "q417_revenue_bridge" -> q417RevenueBridge _,
-    "q415_inversion_audit" -> q415InversionAudit _,
-    "q393_shapley_attribution" -> q393ShapleyAttribution _,
-    "q392_sprt" -> q392Sprt _,
-    "q386_corr_matrix" -> q386CorrMatrix _,
-    "q387_delta_compression" -> q387DeltaCompression _,
-    "q381_kaplan_meier" -> q381KaplanMeier _,
-    "q382_mann_whitney" -> q382MannWhitney _,
-    "q331_interval_frame" -> q331IntervalFrame _,
-    "q304_pagerank" -> q304Pagerank _,
-    "q313_pattern_match" -> q313PatternMatch _,
-    "q271_audience_overlap" -> q271AudienceOverlap _,
-    "q269_outage_report" -> q269OutageReport _,
-    "q264_theil_sen" -> q264TheilSen _,
-    "q262_position_attribution" -> q262PositionAttribution _,
-    "q260_ks_test" -> q260KsTest _,
-    "q258_late_arrival_audit" -> q258LateArrivalAudit _,
-    "q225_sessionize_skew_safe" -> q225SessionizeSkewSafe _,
-    "q244_cuped_readout" -> q244CupedReadout _,
-    "q246_conversion_ztest" -> q246ConversionZtest _,
-    "q221_changepoint_cusum" -> q221ChangepointCusum _,
-    "q222_autocorrelation" -> q222Autocorrelation _,
-    "q220_cross_correlation" -> q220CrossCorrelation _,
-    "q218_debounce_dedup" -> q218DebounceDedup _,
-    "q203_reach_curve" -> q203ReachCurve _,
-    "q205_activity_heatmap" -> q205ActivityHeatmap _,
-    "q206_transition_latency" -> q206TransitionLatency _,
-    "q200_marketing_readout" -> q200MarketingReadout _,
-    "q196_events_between_purchases" -> q196EventsBetweenPurchases _,
-    "q193_gap_histogram" -> q193GapHistogram _,
-    "q184_session_funnel" -> q184SessionFunnel _,
-    "q185_latency_cdf" -> q185LatencyCdf _,
-    "q186_ltv_curve" -> q186LtvCurve _,
-    "q181_trigram_paths" -> q181TrigramPaths _,
-    "q171_interval_coverage" -> q171IntervalCoverage _,
-    "q172_last_touch_attribution" -> q172LastTouchAttribution _,
-    "q175_sliding_mau" -> q175SlidingMau _,
-    "q165_funnel_latency" -> q165FunnelLatency _,
-    "q160_chi_square" -> q160ChiSquare _,
-    "q158_session_matrix" -> q158SessionMatrix _,
-    "q144_transition_matrix" -> q144TransitionMatrix _,
-    "q145_trend_slope" -> q145TrendSlope _,
-    "q141_interpolate_fill" -> q141InterpolateFill _,
-    "q142_time_weighted_avg" -> q142TimeWeightedAvg _,
-    "q135_ab_test" -> q135AbTest _,
-    "q106_gap_fill" -> q106GapFill _,
-    "q107_funnel" -> q107Funnel _,
-    "q108_cohort_retention" -> q108CohortRetention _,
-    "q124_rolling_anomaly" -> q124RollingAnomaly _)
-
-  val oracles: Map[String, String] = Map(
-    "q400_theil_decomposition" -> q400Oracle,
-    "q405_kruskal_wallis" -> q405Oracle,
-    "q407_allen_census" -> q407Oracle,
-    "q414_acf_spectrum" -> q414Oracle,
-    "q417_revenue_bridge" -> q417Oracle,
-    "q415_inversion_audit" -> q415Oracle,
-    "q393_shapley_attribution" -> q393Oracle,
-    "q392_sprt" -> q392Oracle,
-    "q386_corr_matrix" -> q386Oracle,
-    "q387_delta_compression" -> q387Oracle,
-    "q381_kaplan_meier" -> q381Oracle,
-    "q382_mann_whitney" -> q382Oracle,
-    "q331_interval_frame" -> q331Oracle,
-    "q304_pagerank" -> q304Oracle,
-    "q313_pattern_match" -> q313Oracle,
-    "q271_audience_overlap" -> q271Oracle,
-    "q269_outage_report" -> q269Oracle,
-    "q264_theil_sen" -> q264Oracle,
-    "q262_position_attribution" -> q262Oracle,
-    "q260_ks_test" -> q260Oracle,
-    "q258_late_arrival_audit" -> q258Oracle,
-    "q225_sessionize_skew_safe" -> q225Oracle,
-    "q244_cuped_readout" -> q244Oracle,
-    "q246_conversion_ztest" -> q246Oracle,
-    "q221_changepoint_cusum" -> q221Oracle,
-    "q222_autocorrelation" -> q222Oracle,
-    "q220_cross_correlation" -> q220Oracle,
-    "q218_debounce_dedup" -> q218Oracle,
-    "q203_reach_curve" -> q203Oracle,
-    "q205_activity_heatmap" -> q205Oracle,
-    "q206_transition_latency" -> q206Oracle,
-    "q200_marketing_readout" -> q200Oracle,
-    "q196_events_between_purchases" -> q196Oracle,
-    "q193_gap_histogram" -> q193Oracle,
-    "q184_session_funnel" -> q184Oracle,
-    "q185_latency_cdf" -> q185Oracle,
-    "q186_ltv_curve" -> q186Oracle,
-    "q181_trigram_paths" -> q181Oracle,
-    "q171_interval_coverage" -> q171Oracle,
-    "q172_last_touch_attribution" -> q172Oracle,
-    "q175_sliding_mau" -> q175Oracle,
-    "q165_funnel_latency" -> q165Oracle,
-    "q160_chi_square" -> q160Oracle,
-    "q158_session_matrix" -> q158Oracle,
-    "q144_transition_matrix" -> q144Oracle,
-    "q145_trend_slope" -> q145Oracle,
-    "q141_interpolate_fill" -> q141Oracle,
-    "q142_time_weighted_avg" -> q142Oracle,
-    "q135_ab_test" -> q135Oracle,
-    "q106_gap_fill" -> q106Oracle,
-    "q107_funnel" -> q107Oracle,
-    "q108_cohort_retention" -> q108Oracle,
-    "q124_rolling_anomaly" -> q124Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q400_theil_decomposition", q400TheilDecomposition, q400Oracle),
+    Entry("q405_kruskal_wallis", q405KruskalWallis, q405Oracle),
+    Entry("q407_allen_census", q407AllenCensus, q407Oracle),
+    Entry("q414_acf_spectrum", q414AcfSpectrum, q414Oracle),
+    Entry("q417_revenue_bridge", q417RevenueBridge, q417Oracle),
+    Entry("q415_inversion_audit", q415InversionAudit, q415Oracle),
+    Entry("q393_shapley_attribution", q393ShapleyAttribution, q393Oracle),
+    Entry("q392_sprt", q392Sprt, q392Oracle),
+    Entry("q386_corr_matrix", q386CorrMatrix, q386Oracle),
+    Entry("q387_delta_compression", q387DeltaCompression, q387Oracle),
+    Entry("q381_kaplan_meier", q381KaplanMeier, q381Oracle),
+    Entry("q382_mann_whitney", q382MannWhitney, q382Oracle),
+    Entry("q331_interval_frame", q331IntervalFrame, q331Oracle),
+    Entry("q304_pagerank", q304Pagerank, q304Oracle),
+    Entry("q313_pattern_match", q313PatternMatch, q313Oracle),
+    Entry("q271_audience_overlap", q271AudienceOverlap, q271Oracle),
+    Entry("q269_outage_report", q269OutageReport, q269Oracle),
+    Entry("q264_theil_sen", q264TheilSen, q264Oracle),
+    Entry("q262_position_attribution", q262PositionAttribution, q262Oracle),
+    Entry("q260_ks_test", q260KsTest, q260Oracle),
+    Entry("q258_late_arrival_audit", q258LateArrivalAudit, q258Oracle),
+    Entry("q225_sessionize_skew_safe", q225SessionizeSkewSafe, q225Oracle),
+    Entry("q244_cuped_readout", q244CupedReadout, q244Oracle),
+    Entry("q246_conversion_ztest", q246ConversionZtest, q246Oracle),
+    Entry("q221_changepoint_cusum", q221ChangepointCusum, q221Oracle),
+    Entry("q222_autocorrelation", q222Autocorrelation, q222Oracle),
+    Entry("q220_cross_correlation", q220CrossCorrelation, q220Oracle),
+    Entry("q218_debounce_dedup", q218DebounceDedup, q218Oracle),
+    Entry("q203_reach_curve", q203ReachCurve, q203Oracle),
+    Entry("q205_activity_heatmap", q205ActivityHeatmap, q205Oracle),
+    Entry("q206_transition_latency", q206TransitionLatency, q206Oracle),
+    Entry("q200_marketing_readout", q200MarketingReadout, q200Oracle),
+    Entry("q196_events_between_purchases", q196EventsBetweenPurchases, q196Oracle),
+    Entry("q193_gap_histogram", q193GapHistogram, q193Oracle),
+    Entry("q184_session_funnel", q184SessionFunnel, q184Oracle),
+    Entry("q185_latency_cdf", q185LatencyCdf, q185Oracle),
+    Entry("q186_ltv_curve", q186LtvCurve, q186Oracle),
+    Entry("q181_trigram_paths", q181TrigramPaths, q181Oracle),
+    Entry("q171_interval_coverage", q171IntervalCoverage, q171Oracle),
+    Entry("q172_last_touch_attribution", q172LastTouchAttribution, q172Oracle),
+    Entry("q175_sliding_mau", q175SlidingMau, q175Oracle),
+    Entry("q165_funnel_latency", q165FunnelLatency, q165Oracle),
+    Entry("q160_chi_square", q160ChiSquare, q160Oracle),
+    Entry("q158_session_matrix", q158SessionMatrix, q158Oracle),
+    Entry("q144_transition_matrix", q144TransitionMatrix, q144Oracle),
+    Entry("q145_trend_slope", q145TrendSlope, q145Oracle),
+    Entry("q141_interpolate_fill", q141InterpolateFill, q141Oracle),
+    Entry("q142_time_weighted_avg", q142TimeWeightedAvg, q142Oracle),
+    Entry("q135_ab_test", q135AbTest, q135Oracle),
+    Entry("q106_gap_fill", q106GapFill, q106Oracle),
+    Entry("q107_funnel", q107Funnel, q107Oracle),
+    Entry("q108_cohort_retention", q108CohortRetention, q108Oracle),
+    Entry("q124_rolling_anomaly", q124RollingAnomaly, q124Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -80,13 +81,8 @@ object EventTime {
          CAST(CAST(sum(CAST(value AS DECIMAL(25,6))) AS STRING) AS DOUBLE) AS total
        FROM s GROUP BY user_id, sid ORDER BY user_id, session_start"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q23_event_tumbling_window" -> q23TumblingWindow _,
-    "q24_event_sliding_window" -> q24SlidingWindow _,
-    "q25_event_session_window" -> q25SessionWindow _)
-
-  val oracles: Map[String, String] = Map(
-    "q23_event_tumbling_window" -> q23Oracle,
-    "q24_event_sliding_window" -> q24Oracle,
-    "q25_event_session_window" -> q25Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q23_event_tumbling_window", q23TumblingWindow, q23Oracle),
+    Entry("q24_event_sliding_window", q24SlidingWindow, q24Oracle),
+    Entry("q25_event_session_window", q25SessionWindow, q25Oracle))
 }

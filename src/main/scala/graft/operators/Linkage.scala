@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -328,17 +329,10 @@ object Linkage {
            * 1000000 // t.n_truth AS BIGINT) AS pc_ppm
        FROM s, truth t ORDER BY s.scheme"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q360_blocking_quality" -> q360BlockingQuality _,
-    "q98_fuzzy_join" -> q98FuzzyJoin _,
-    "q194_linkage_patterns" -> q194LinkagePatterns _,
-    "q199_sorted_neighborhood" -> q199SortedNeighborhood _,
-    "q224_block_overflow_report" -> q224BlockOverflowReport _)
-
-  val oracles: Map[String, String] = Map(
-    "q360_blocking_quality" -> q360Oracle,
-    "q98_fuzzy_join" -> q98Oracle,
-    "q194_linkage_patterns" -> q194Oracle,
-    "q199_sorted_neighborhood" -> q199Oracle,
-    "q224_block_overflow_report" -> q224Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q360_blocking_quality", q360BlockingQuality, q360Oracle),
+    Entry("q98_fuzzy_join", q98FuzzyJoin, q98Oracle),
+    Entry("q194_linkage_patterns", q194LinkagePatterns, q194Oracle),
+    Entry("q199_sorted_neighborhood", q199SortedNeighborhood, q199Oracle),
+    Entry("q224_block_overflow_report", q224BlockOverflowReport, q224Oracle))
 }

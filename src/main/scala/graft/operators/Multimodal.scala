@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -1381,45 +1382,24 @@ object MediaCodecDemo extends Serializable {
        FROM pats p JOIN agg a USING (seed) ORDER BY p.seed"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q404_rle_estimate" -> q404RleEstimate _,
-    "q412_dpcm_estimate" -> q412DpcmEstimate _,
-    "q398_image_patches" -> q398ImagePatches _,
-    "q396_audio_lag_align" -> q396AudioLagAlign _,
-    "q384_image_gradient" -> q384ImageGradient _,
-    "q356_otsu_threshold" -> q356OtsuThreshold _,
-    "q359_audio_decimate" -> q359AudioDecimate _,
-    "q355_border_detect" -> q355BorderDetect _,
-    "q339_zero_crossing" -> q339ZeroCrossing _,
-    "q330_audio_gain" -> q330AudioGain _,
-    "q279_audio_clipping" -> q279AudioClipping _,
-    "q189_pixel_histogram" -> q189PixelHistogram _,
-    "q153_audio_silence" -> q153AudioSilence _,
-    "q151_image_ahash_dedup" -> q151ImageAhashDedup _,
-    "q41_multimodal_decode" -> q41MultimodalDecode _,
-    "q42_multimodal_frame_sample" -> q42FrameSamplePlan _,
-    "q50_multimodal_binaryfile_source" -> q50BinaryFileSource _,
-    "q59_multimodal_bmp_decode" -> q59BmpDecode _,
-    "q60_multimodal_wav_decode" -> q60WavDecode _)
-
-  val oracles: Map[String, String] = Map(
-    "q398_image_patches" -> q398Oracle,
-    "q404_rle_estimate" -> q404Oracle,
-    "q412_dpcm_estimate" -> q412Oracle,
-    "q396_audio_lag_align" -> q396Oracle,
-    "q384_image_gradient" -> q384Oracle,
-    "q356_otsu_threshold" -> q356Oracle,
-    "q359_audio_decimate" -> q359Oracle,
-    "q355_border_detect" -> q355Oracle,
-    "q339_zero_crossing" -> q339Oracle,
-    "q330_audio_gain" -> q330Oracle,
-    "q279_audio_clipping" -> q279Oracle,
-    "q189_pixel_histogram" -> q189Oracle,
-    "q153_audio_silence" -> q153Oracle,
-    "q151_image_ahash_dedup" -> q151Oracle,
-    "q41_multimodal_decode" -> q41Oracle,
-    "q42_multimodal_frame_sample" -> q42Oracle,
-    "q50_multimodal_binaryfile_source" -> q50Oracle,
-    "q59_multimodal_bmp_decode" -> q59Oracle,
-    "q60_multimodal_wav_decode" -> q60Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q404_rle_estimate", q404RleEstimate, q404Oracle),
+    Entry("q412_dpcm_estimate", q412DpcmEstimate, q412Oracle),
+    Entry("q398_image_patches", q398ImagePatches, q398Oracle),
+    Entry("q396_audio_lag_align", q396AudioLagAlign, q396Oracle),
+    Entry("q384_image_gradient", q384ImageGradient, q384Oracle),
+    Entry("q356_otsu_threshold", q356OtsuThreshold, q356Oracle),
+    Entry("q359_audio_decimate", q359AudioDecimate, q359Oracle),
+    Entry("q355_border_detect", q355BorderDetect, q355Oracle),
+    Entry("q339_zero_crossing", q339ZeroCrossing, q339Oracle),
+    Entry("q330_audio_gain", q330AudioGain, q330Oracle),
+    Entry("q279_audio_clipping", q279AudioClipping, q279Oracle),
+    Entry("q189_pixel_histogram", q189PixelHistogram, q189Oracle),
+    Entry("q153_audio_silence", q153AudioSilence, q153Oracle),
+    Entry("q151_image_ahash_dedup", q151ImageAhashDedup, q151Oracle),
+    Entry("q41_multimodal_decode", q41MultimodalDecode, q41Oracle),
+    Entry("q42_multimodal_frame_sample", q42FrameSamplePlan, q42Oracle),
+    Entry("q50_multimodal_binaryfile_source", q50BinaryFileSource, q50Oracle),
+    Entry("q59_multimodal_bmp_decode", q59BmpDecode, q59Oracle),
+    Entry("q60_multimodal_wav_decode", q60WavDecode, q60Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -1831,63 +1832,33 @@ object Profiling {
          CAST((dict_chars + (n_rows * code_bits + 7) // 8) * 1000000 // raw_bytes AS BIGINT) AS ratio_ppm
        FROM b ORDER BY col_name"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q402_spearman_rank" -> q402SpearmanRank _,
-    "q408_dict_encoding" -> q408DictEncoding _,
-    "q397_hll_intersection" -> q397HllIntersection _,
-    "q395_t_closeness" -> q395TCloseness _,
-    "q388_dp_release" -> q388DpRelease _,
-    "q378_benford_audit" -> q378BenfordAudit _,
-    "q379_kmv_distinct" -> q379KmvDistinct _,
-    "q380_seasonal_index" -> q380SeasonalIndex _,
-    "q371_generalization_search" -> q371GeneralizationSearch _,
-    "q373_xmr_control_chart" -> q373XmrControlChart _,
-    "q369_ewma_trend" -> q369EwmaTrend _,
-    "q363_emd_drift" -> q363EmdDrift _,
-    "q323_corpus_datasheet" -> q323CorpusDatasheet _,
-    "q302_bootstrap_ci" -> q302BootstrapCi _,
-    "q251_k_anonymity" -> q251KAnonymity _,
-    "q214_pareto_coverage" -> q214ParetoCoverage _,
-    "q204_dispersion_index" -> q204DispersionIndex _,
-    "q176_mad_outliers" -> q176MadOutliers _,
-    "q178_gini_concentration" -> q178GiniConcentration _,
-    "q174_histogram_drift" -> q174HistogramDrift _,
-    "q341_psi_drift" -> q341PsiDrift _,
-    "q343_cusum_changepoint" -> q343CusumChangepoint _,
-    "q159_zscore_outliers" -> q159ZscoreOutliers _,
-    "q134_equidepth_bins" -> q134EquidepthBins _,
-    "q114_data_quality" -> q114DataQuality _,
-    "q168_cm_heavy_hitters" -> q168CmHeavyHitters _,
-    "q81_profile" -> q81Profile _,
-    "q99_histogram" -> q99Histogram _)
-
-  val oracles: Map[String, String] = Map(
-    "q402_spearman_rank" -> q402Oracle,
-    "q408_dict_encoding" -> q408Oracle,
-    "q397_hll_intersection" -> q397Oracle,
-    "q395_t_closeness" -> q395Oracle,
-    "q388_dp_release" -> q388Oracle,
-    "q378_benford_audit" -> q378Oracle,
-    "q379_kmv_distinct" -> q379Oracle,
-    "q380_seasonal_index" -> q380Oracle,
-    "q371_generalization_search" -> q371Oracle,
-    "q373_xmr_control_chart" -> q373Oracle,
-    "q369_ewma_trend" -> q369Oracle,
-    "q363_emd_drift" -> q363Oracle,
-    "q323_corpus_datasheet" -> q323Oracle,
-    "q302_bootstrap_ci" -> q302Oracle,
-    "q251_k_anonymity" -> q251Oracle,
-    "q214_pareto_coverage" -> q214Oracle,
-    "q204_dispersion_index" -> q204Oracle,
-    "q176_mad_outliers" -> q176Oracle,
-    "q178_gini_concentration" -> q178Oracle,
-    "q174_histogram_drift" -> q174Oracle,
-    "q341_psi_drift" -> q341Oracle,
-    "q343_cusum_changepoint" -> q343Oracle,
-    "q159_zscore_outliers" -> q159Oracle,
-    "q134_equidepth_bins" -> q134Oracle,
-    "q114_data_quality" -> q114Oracle,
-    "q168_cm_heavy_hitters" -> q168Oracle,
-    "q81_profile" -> q81Oracle,
-    "q99_histogram" -> q99Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q402_spearman_rank", q402SpearmanRank, q402Oracle),
+    Entry("q408_dict_encoding", q408DictEncoding, q408Oracle),
+    Entry("q397_hll_intersection", q397HllIntersection, q397Oracle),
+    Entry("q395_t_closeness", q395TCloseness, q395Oracle),
+    Entry("q388_dp_release", q388DpRelease, q388Oracle),
+    Entry("q378_benford_audit", q378BenfordAudit, q378Oracle),
+    Entry("q379_kmv_distinct", q379KmvDistinct, q379Oracle),
+    Entry("q380_seasonal_index", q380SeasonalIndex, q380Oracle),
+    Entry("q371_generalization_search", q371GeneralizationSearch, q371Oracle),
+    Entry("q373_xmr_control_chart", q373XmrControlChart, q373Oracle),
+    Entry("q369_ewma_trend", q369EwmaTrend, q369Oracle),
+    Entry("q363_emd_drift", q363EmdDrift, q363Oracle),
+    Entry("q323_corpus_datasheet", q323CorpusDatasheet, q323Oracle),
+    Entry("q302_bootstrap_ci", q302BootstrapCi, q302Oracle),
+    Entry("q251_k_anonymity", q251KAnonymity, q251Oracle),
+    Entry("q214_pareto_coverage", q214ParetoCoverage, q214Oracle),
+    Entry("q204_dispersion_index", q204DispersionIndex, q204Oracle),
+    Entry("q176_mad_outliers", q176MadOutliers, q176Oracle),
+    Entry("q178_gini_concentration", q178GiniConcentration, q178Oracle),
+    Entry("q174_histogram_drift", q174HistogramDrift, q174Oracle),
+    Entry("q341_psi_drift", q341PsiDrift, q341Oracle),
+    Entry("q343_cusum_changepoint", q343CusumChangepoint, q343Oracle),
+    Entry("q159_zscore_outliers", q159ZscoreOutliers, q159Oracle),
+    Entry("q134_equidepth_bins", q134EquidepthBins, q134Oracle),
+    Entry("q114_data_quality", q114DataQuality, q114Oracle),
+    Entry("q168_cm_heavy_hitters", q168CmHeavyHitters, q168Oracle),
+    Entry("q81_profile", q81Profile, q81Oracle),
+    Entry("q99_histogram", q99Histogram, q99Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.expressions.Window
@@ -1863,115 +1864,59 @@ object Relational {
        FROM rk GROUP BY 1, 2
        ORDER BY priority, revenue_cents DESC, bucket"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q418_tukey_fences" -> q418TukeyFences _,
-    "q420_topk_others" -> q420TopkOthers _,
-    "q215_minmax_scaling" -> q215MinmaxScaling _,
-    "q207_collation_group" -> q207CollationGroup _,
-    "q201_topk_with_ties" -> q201TopkWithTies _,
-    "q202_share_of_parent" -> q202ShareOfParent _,
-    "q170_skyline_pareto" -> q170SkylinePareto _,
-    "q177_weighted_median" -> q177WeightedMedian _,
-    "q179_gaps_islands" -> q179GapsIslands _,
-    "q187_weekly_percentiles" -> q187WeeklyPercentiles _,
-    "q195_join_hints" -> q195JoinHints _,
-    "q137_recursive_cte" -> q137RecursiveCte _,
-    "q138_lateral_topk" -> q138LateralTopk _,
-    "q154_cooccurrence_cosine" -> q154CooccurrenceCosine _,
-    "q155_period_over_period" -> q155PeriodOverPeriod _,
-    "q161_rfm_segmentation" -> q161RfmSegmentation _,
-    "q131_star_join" -> q131StarJoin _,
-    "q132_winsorize" -> q132Winsorize _,
-    "q91_topk_udaf" -> q91TopKUdaf _,
-    "q67_lateral_explode" -> q67LateralExplode _,
-    "q61_median_exact" -> q61MedianExact _,
-    "q62_approx_percentile" -> q62ApproxPercentile _,
-    "q63_window_distribution" -> q63WindowDistribution _,
-    "q64_window_positional" -> q64WindowPositional _,
-    "q55_pivot" -> q55Pivot _,
-    "q56_subqueries" -> q56Subqueries _,
-    "q57_null_funcs" -> q57NullFuncs _,
-    "q53_stats_agg" -> q53StatsAgg _,
-    "q54_arg_agg" -> q54ArgAgg _,
-    "q47_join_right_outer" -> q47JoinRightOuter _,
-    "q48_grouping_sets" -> q48GroupingSets _,
-    "q49_window_range_frame" -> q49WindowRangeFrame _,
-    "q01_agg_pricing_summary" -> q01PricingSummary _,
-    "q02_filter_project" -> q02FilterProject _,
-    "q03_join_inner_broadcast" -> q03JoinBroadcast _,
-    "q04_join_left_outer" -> q04JoinLeftOuter _,
-    "q05_join_semi" -> q05JoinSemi _,
-    "q06_join_anti" -> q06JoinAnti _,
-    "q07_join_full_outer" -> q07JoinFullOuter _,
-    "q08_join_theta" -> q08JoinTheta _,
-    "q09_count_distinct" -> q09CountDistinct _,
-    "q10_approx_count_distinct" -> q10ApproxDistinct _,
-    "q11_rollup" -> q11Rollup _,
-    "q12_cube" -> q12Cube _,
-    "q13_window_rank" -> q13WindowRank _,
-    "q14_window_running" -> q14WindowRunning _,
-    "q15_topk" -> q15TopK _,
-    "q16_grouped_topk" -> q16GroupedTopK _,
-    "q17_set_ops" -> q17SetOps _,
-    "q18_sql_values" -> q18SqlValues _,
-    "q76_unpivot" -> q76Unpivot _,
-    "q77_cms_heavy_hitters" -> q77CmsHeavyHitters _,
-    "q120_hll_sketch_merge" -> q120HllMerge _,
-    "q123_frequent_pairs" -> q123FrequentPairs _)
-
-  val oracles: Map[String, String] = Map(
-    "q418_tukey_fences" -> q418Oracle,
-    "q420_topk_others" -> q420Oracle,
-    "q215_minmax_scaling" -> q215Oracle,
-    "q207_collation_group" -> q207Oracle,
-    "q201_topk_with_ties" -> q201Oracle,
-    "q202_share_of_parent" -> q202Oracle,
-    "q170_skyline_pareto" -> q170Oracle,
-    "q177_weighted_median" -> q177Oracle,
-    "q179_gaps_islands" -> q179Oracle,
-    "q187_weekly_percentiles" -> q187Oracle,
-    "q195_join_hints" -> q195Oracle,
-    "q137_recursive_cte" -> q137Oracle,
-    "q138_lateral_topk" -> q138Oracle,
-    "q154_cooccurrence_cosine" -> q154Oracle,
-    "q155_period_over_period" -> q155Oracle,
-    "q161_rfm_segmentation" -> q161Oracle,
-    "q131_star_join" -> q131Oracle,
-    "q132_winsorize" -> q132Oracle,
-    "q120_hll_sketch_merge" -> q120Oracle,
-    "q123_frequent_pairs" -> q123Oracle,
-    "q91_topk_udaf" -> q91Oracle,
-    "q67_lateral_explode" -> q67Oracle,
-    "q61_median_exact" -> q61Oracle,
-    "q63_window_distribution" -> q63Oracle,
-    "q64_window_positional" -> q64Oracle,
-    "q55_pivot" -> q55Oracle,
-    "q56_subqueries" -> q56Oracle,
-    "q57_null_funcs" -> q57Oracle,
-    "q53_stats_agg" -> q53Oracle,
-    "q54_arg_agg" -> q54Oracle,
-    "q47_join_right_outer" -> q47Oracle,
-    "q48_grouping_sets" -> q48Oracle,
-    "q49_window_range_frame" -> q49Oracle,
-    "q01_agg_pricing_summary" -> q01Oracle,
-    "q02_filter_project" -> q02Oracle,
-    "q03_join_inner_broadcast" -> q03Oracle,
-    "q04_join_left_outer" -> q04Oracle,
-    "q05_join_semi" -> q05Oracle,
-    "q06_join_anti" -> q06Oracle,
-    "q07_join_full_outer" -> q07Oracle,
-    "q08_join_theta" -> q08Oracle,
-    "q09_count_distinct" -> q09Oracle,
-    "q10_approx_count_distinct" -> q10Oracle,
-    "q62_approx_percentile" -> q62Oracle,
-    "q11_rollup" -> q11Oracle,
-    "q12_cube" -> q12Oracle,
-    "q13_window_rank" -> q13Oracle,
-    "q14_window_running" -> q14Oracle,
-    "q15_topk" -> q15Oracle,
-    "q16_grouped_topk" -> q16Oracle,
-    "q17_set_ops" -> q17Oracle,
-    "q18_sql_values" -> q18Oracle,
-    "q76_unpivot" -> q76Oracle,
-    "q77_cms_heavy_hitters" -> q77Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q418_tukey_fences", q418TukeyFences, q418Oracle),
+    Entry("q420_topk_others", q420TopkOthers, q420Oracle),
+    Entry("q215_minmax_scaling", q215MinmaxScaling, q215Oracle),
+    Entry("q207_collation_group", q207CollationGroup, q207Oracle),
+    Entry("q201_topk_with_ties", q201TopkWithTies, q201Oracle),
+    Entry("q202_share_of_parent", q202ShareOfParent, q202Oracle),
+    Entry("q170_skyline_pareto", q170SkylinePareto, q170Oracle),
+    Entry("q177_weighted_median", q177WeightedMedian, q177Oracle),
+    Entry("q179_gaps_islands", q179GapsIslands, q179Oracle),
+    Entry("q187_weekly_percentiles", q187WeeklyPercentiles, q187Oracle),
+    Entry("q195_join_hints", q195JoinHints, q195Oracle),
+    Entry("q137_recursive_cte", q137RecursiveCte, q137Oracle),
+    Entry("q138_lateral_topk", q138LateralTopk, q138Oracle),
+    Entry("q154_cooccurrence_cosine", q154CooccurrenceCosine, q154Oracle),
+    Entry("q155_period_over_period", q155PeriodOverPeriod, q155Oracle),
+    Entry("q161_rfm_segmentation", q161RfmSegmentation, q161Oracle),
+    Entry("q131_star_join", q131StarJoin, q131Oracle),
+    Entry("q132_winsorize", q132Winsorize, q132Oracle),
+    Entry("q91_topk_udaf", q91TopKUdaf, q91Oracle),
+    Entry("q67_lateral_explode", q67LateralExplode, q67Oracle),
+    Entry("q61_median_exact", q61MedianExact, q61Oracle),
+    Entry("q62_approx_percentile", q62ApproxPercentile, q62Oracle),
+    Entry("q63_window_distribution", q63WindowDistribution, q63Oracle),
+    Entry("q64_window_positional", q64WindowPositional, q64Oracle),
+    Entry("q55_pivot", q55Pivot, q55Oracle),
+    Entry("q56_subqueries", q56Subqueries, q56Oracle),
+    Entry("q57_null_funcs", q57NullFuncs, q57Oracle),
+    Entry("q53_stats_agg", q53StatsAgg, q53Oracle),
+    Entry("q54_arg_agg", q54ArgAgg, q54Oracle),
+    Entry("q47_join_right_outer", q47JoinRightOuter, q47Oracle),
+    Entry("q48_grouping_sets", q48GroupingSets, q48Oracle),
+    Entry("q49_window_range_frame", q49WindowRangeFrame, q49Oracle),
+    Entry("q01_agg_pricing_summary", q01PricingSummary, q01Oracle),
+    Entry("q02_filter_project", q02FilterProject, q02Oracle),
+    Entry("q03_join_inner_broadcast", q03JoinBroadcast, q03Oracle),
+    Entry("q04_join_left_outer", q04JoinLeftOuter, q04Oracle),
+    Entry("q05_join_semi", q05JoinSemi, q05Oracle),
+    Entry("q06_join_anti", q06JoinAnti, q06Oracle),
+    Entry("q07_join_full_outer", q07JoinFullOuter, q07Oracle),
+    Entry("q08_join_theta", q08JoinTheta, q08Oracle),
+    Entry("q09_count_distinct", q09CountDistinct, q09Oracle),
+    Entry("q10_approx_count_distinct", q10ApproxDistinct, q10Oracle),
+    Entry("q11_rollup", q11Rollup, q11Oracle),
+    Entry("q12_cube", q12Cube, q12Oracle),
+    Entry("q13_window_rank", q13WindowRank, q13Oracle),
+    Entry("q14_window_running", q14WindowRunning, q14Oracle),
+    Entry("q15_topk", q15TopK, q15Oracle),
+    Entry("q16_grouped_topk", q16GroupedTopK, q16Oracle),
+    Entry("q17_set_ops", q17SetOps, q17Oracle),
+    Entry("q18_sql_values", q18SqlValues, q18Oracle),
+    Entry("q76_unpivot", q76Unpivot, q76Oracle),
+    Entry("q77_cms_heavy_hitters", q77CmsHeavyHitters, q77Oracle),
+    Entry("q120_hll_sketch_merge", q120HllMerge, q120Oracle),
+    Entry("q123_frequent_pairs", q123FrequentPairs, q123Oracle))
 }

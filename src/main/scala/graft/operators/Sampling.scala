@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -783,9 +784,9 @@ object Sampling {
     * bucket-local running sums, so no single-task window ever sees the
     * corpus (the q214 pattern). Input must carry (doc_id, n_tok, h,
     * bucket); output adds `cum` (inclusive running total) and `st`
-    * (exclusive start offset). Shared by q342 and the SkewBenchPacking
-    * rehearsal, which plants degenerate token/bucket distributions
-    * against exactly this code path.
+    * (exclusive start offset). Shared by q342 and the SamplingSpec skew
+    * fixtures, which plant degenerate token/bucket distributions against
+    * exactly this code path.
     */
   def tokenPrefixSum(base: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1056,41 +1057,22 @@ object Sampling {
            // (CAST(s.n_docs AS HUGEINT) * (t.nn - s.n_docs + 1) * 1000000 // t.nn) AS BIGINT) AS mix_ratio_ppm
        FROM st s, tot t ORDER BY s.source"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q361_mixing_runs" -> q361MixingRuns _,
-    "q342_sequence_packing" -> q342SequencePacking _,
-    "q347_fim_plan" -> q347FimSpanPlan _,
-    "q352_pack_fragmentation" -> q352PackFragmentation _,
-    "q340_epoch_order" -> q340EpochOrder _,
-    "q298_mixture_sweep" -> q298MixtureSweep _,
-    "q268_weighted_reservoir" -> q268WeightedReservoir _,
-    "q261_split_contamination" -> q261SplitContamination _,
-    "q255_fold_assignment" -> q255FoldAssignment _,
-    "q256_quota_allocation" -> q256QuotaAllocation _,
-    "q73_stratified_sample" -> q73StratifiedSample _,
-    "q85_sample_cap_weighted" -> q85CapWeighted _,
-    "q90_shuffle_deterministic" -> q90ShuffleDeterministic _,
-    "q216_systematic_sample" -> q216SystematicSample _,
-    "q226_group_aware_split" -> q226GroupAwareSplit _,
-    "q243_temporal_split" -> q243TemporalSplit _,
-    "q227_temperature_sample" -> q227TemperatureSample _)
-
-  val oracles: Map[String, String] = Map(
-    "q361_mixing_runs" -> q361Oracle,
-    "q342_sequence_packing" -> q342Oracle,
-    "q347_fim_plan" -> q347Oracle,
-    "q352_pack_fragmentation" -> q352Oracle,
-    "q340_epoch_order" -> q340Oracle,
-    "q298_mixture_sweep" -> q298Oracle,
-    "q268_weighted_reservoir" -> q268Oracle,
-    "q261_split_contamination" -> q261Oracle,
-    "q255_fold_assignment" -> q255Oracle,
-    "q256_quota_allocation" -> q256Oracle,
-    "q73_stratified_sample" -> q73Oracle,
-    "q85_sample_cap_weighted" -> q85Oracle,
-    "q90_shuffle_deterministic" -> q90Oracle,
-    "q216_systematic_sample" -> q216Oracle,
-    "q226_group_aware_split" -> q226Oracle,
-    "q243_temporal_split" -> q243Oracle,
-    "q227_temperature_sample" -> q227Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q361_mixing_runs", q361MixingRuns, q361Oracle),
+    Entry("q342_sequence_packing", q342SequencePacking, q342Oracle),
+    Entry("q347_fim_plan", q347FimSpanPlan, q347Oracle),
+    Entry("q352_pack_fragmentation", q352PackFragmentation, q352Oracle),
+    Entry("q340_epoch_order", q340EpochOrder, q340Oracle),
+    Entry("q298_mixture_sweep", q298MixtureSweep, q298Oracle),
+    Entry("q268_weighted_reservoir", q268WeightedReservoir, q268Oracle),
+    Entry("q261_split_contamination", q261SplitContamination, q261Oracle),
+    Entry("q255_fold_assignment", q255FoldAssignment, q255Oracle),
+    Entry("q256_quota_allocation", q256QuotaAllocation, q256Oracle),
+    Entry("q73_stratified_sample", q73StratifiedSample, q73Oracle),
+    Entry("q85_sample_cap_weighted", q85CapWeighted, q85Oracle),
+    Entry("q90_shuffle_deterministic", q90ShuffleDeterministic, q90Oracle),
+    Entry("q216_systematic_sample", q216SystematicSample, q216Oracle),
+    Entry("q226_group_aware_split", q226GroupAwareSplit, q226Oracle),
+    Entry("q243_temporal_split", q243TemporalSplit, q243Oracle),
+    Entry("q227_temperature_sample", q227TemperatureSample, q227Oracle))
 }

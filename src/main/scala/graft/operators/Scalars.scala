@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -196,19 +197,11 @@ object Scalars {
        CAST(CAST(sum(CAST(value AS DECIMAL(25,6))) AS STRING) AS DOUBLE) AS total_value
        FROM events GROUP BY 1 ORDER BY 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q139_variant_json" -> q139VariantJson _,
-    "q68_array_funcs" -> q68ArrayFuncs _,
-    "q19_string_funcs" -> q19StringFuncs _,
-    "q20_date_funcs" -> q20DateFuncs _,
-    "q21_math_funcs" -> q21MathFuncs _,
-    "q22_json_funcs" -> q22JsonFuncs _)
-
-  val oracles: Map[String, String] = Map(
-    "q139_variant_json" -> q139Oracle,
-    "q68_array_funcs" -> q68Oracle,
-    "q19_string_funcs" -> q19Oracle,
-    "q20_date_funcs" -> q20Oracle,
-    "q21_math_funcs" -> q21Oracle,
-    "q22_json_funcs" -> q22Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q139_variant_json", q139VariantJson, q139Oracle),
+    Entry("q68_array_funcs", q68ArrayFuncs, q68Oracle),
+    Entry("q19_string_funcs", q19StringFuncs, q19Oracle),
+    Entry("q20_date_funcs", q20DateFuncs, q20Oracle),
+    Entry("q21_math_funcs", q21MathFuncs, q21Oracle),
+    Entry("q22_json_funcs", q22JsonFuncs, q22Oracle))
 }

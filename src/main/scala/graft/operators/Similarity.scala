@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -3983,99 +3984,51 @@ object Similarity {
          CAST(cum_pos * 1000000 // pp AS BIGINT) AS recall_ppm
        FROM c ORDER BY decile"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q370_gains_curve" -> q370GainsCurve _,
-    "q362_graph_walk_ann" -> q362GraphWalkAnn _,
-    "q357_sq8_recall" -> q357Sq8Recall _,
-    "q324_knn_maintain" -> q324KnnMaintain _,
-    "q332_build_rp_lsh" -> q332BuildRpLsh _,
-    "q337_rank_correlation" -> q337RankCorrelation _,
-    "q320_multiprobe_lsh" -> q320MultiprobeLsh _,
-    "q322_nprobe_sweep" -> q322NprobeSweep _,
-    "q314_build_knn_graph" -> q314BuildKnnGraph _,
-    "q315_hubness_audit" -> q315HubnessAudit _,
-    "q344_label_propagation" -> q344LabelPropagation _,
-    "q345_knn_triangles" -> q345TriangleCensus _,
-    "q348_centroid_auc" -> q348CentroidAuc _,
-    "q349_centroid_maintain" -> q349CentroidMaintain _,
-    "q351_mrr_eval" -> q351MrrEval _,
-    "q353_conformal_sets" -> q353ConformalCalibration _,
-    "q307_random_projection" -> q307RandomProjection _,
-    "q303_ndcg_eval" -> q303NdcgEval _,
-    "q300_bitext_margin" -> q300BitextMarginMining _,
-    "q297_ivf_list_balance" -> q297IvfListBalance _,
-    "q292_kcenter_coreset" -> q292KCenterCoreset _,
-    "q291_ivf_pq_ann" -> q291IvfPqAnn _,
-    "q288_label_separation" -> q288LabelSeparation _,
-    "q285_rank_fusion" -> q285RankFusion _,
-    "q284_maxsim_retrieval" -> q284MaxSimRetrieval _,
-    "q277_matryoshka_overlap" -> q277MatryoshkaOverlap _,
-    "q273_hard_negatives" -> q273HardNegatives _,
-    "q272_pq_ann" -> q272PqAnn _,
-    "q229_embedding_audit" -> q229EmbeddingAudit _,
-    "q211_power_iteration" -> q211PowerIteration _,
-    "q182_cluster_scatter" -> q182ClusterScatter _,
-    "q58_dedup_embedding_lsh" -> q58EmbeddingDedupLsh _,
-    "q51_similarity_ivf_topk" -> q51IvfTopK _,
-    "q235_build_ivf_index" -> q235BuildIvfIndex _,
-    "q241_ivf_recall" -> q241IvfRecall _,
-    "q416_nprobe_curve" -> q416NprobeCurve _,
-    "q245_ivf_drift" -> q245IvfDrift _,
-    "q249_semantic_dedup" -> q249SemanticDedup _,
-    "q166_filtered_ivf" -> q166FilteredIvf _,
-    "q34_similarity_cosine_topk" -> q34CosineTopK _,
-    "q156_filtered_ann" -> q156FilteredAnn _,
-    "q35_similarity_ann_lsh" -> q35AnnLsh _,
-    "q36_similarity_embedding_neardup" -> q36EmbeddingNearDup _,
-    "q84_similarity_ann_batch" -> q84AnnBatch _,
-    "q86_kmeans_step" -> q86KmeansStep _,
-    "q113_similarity_quantized" -> q113QuantizedTopK _)
-
-  val oracles: Map[String, String] = Map(
-    "q370_gains_curve" -> q370Oracle,
-    "q362_graph_walk_ann" -> q362Oracle,
-    "q357_sq8_recall" -> q357Oracle,
-    "q324_knn_maintain" -> q324Oracle,
-    "q332_build_rp_lsh" -> q332Oracle,
-    "q337_rank_correlation" -> q337Oracle,
-    "q320_multiprobe_lsh" -> q320Oracle,
-    "q322_nprobe_sweep" -> q322Oracle,
-    "q314_build_knn_graph" -> q314Oracle,
-    "q315_hubness_audit" -> q315Oracle,
-    "q344_label_propagation" -> q344Oracle,
-    "q345_knn_triangles" -> q345Oracle,
-    "q348_centroid_auc" -> q348Oracle,
-    "q349_centroid_maintain" -> q349Oracle,
-    "q351_mrr_eval" -> q351Oracle,
-    "q353_conformal_sets" -> q353Oracle,
-    "q307_random_projection" -> q307Oracle,
-    "q303_ndcg_eval" -> q303Oracle,
-    "q300_bitext_margin" -> q300Oracle,
-    "q297_ivf_list_balance" -> q297Oracle,
-    "q292_kcenter_coreset" -> q292Oracle,
-    "q291_ivf_pq_ann" -> q291Oracle,
-    "q288_label_separation" -> q288Oracle,
-    "q285_rank_fusion" -> q285Oracle,
-    "q284_maxsim_retrieval" -> q284Oracle,
-    "q277_matryoshka_overlap" -> q277Oracle,
-    "q273_hard_negatives" -> q273Oracle,
-    "q272_pq_ann" -> q272Oracle,
-    "q229_embedding_audit" -> q229Oracle,
-    "q211_power_iteration" -> q211Oracle,
-    "q182_cluster_scatter" -> q182Oracle,
-    "q35_similarity_ann_lsh" -> q35Oracle,
-    "q58_dedup_embedding_lsh" -> q58Oracle,
-    "q51_similarity_ivf_topk" -> q51Oracle,
-    "q235_build_ivf_index" -> q235Oracle,
-    "q241_ivf_recall" -> q241Oracle,
-    "q416_nprobe_curve" -> q416Oracle,
-    "q245_ivf_drift" -> q245Oracle,
-    "q249_semantic_dedup" -> q249Oracle,
-    "q166_filtered_ivf" -> q166Oracle,
-    "q34_similarity_cosine_topk" -> q34Oracle,
-    "q156_filtered_ann" -> q156Oracle,
-    "q36_similarity_embedding_neardup" -> q36Oracle,
-    "q84_similarity_ann_batch" -> q84Oracle,
-    "q86_kmeans_step" -> q86Oracle,
-    "q113_similarity_quantized" -> q113Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q370_gains_curve", q370GainsCurve, q370Oracle),
+    Entry("q362_graph_walk_ann", q362GraphWalkAnn, q362Oracle),
+    Entry("q357_sq8_recall", q357Sq8Recall, q357Oracle),
+    Entry("q324_knn_maintain", q324KnnMaintain, q324Oracle),
+    Entry("q332_build_rp_lsh", q332BuildRpLsh, q332Oracle),
+    Entry("q337_rank_correlation", q337RankCorrelation, q337Oracle),
+    Entry("q320_multiprobe_lsh", q320MultiprobeLsh, q320Oracle),
+    Entry("q322_nprobe_sweep", q322NprobeSweep, q322Oracle),
+    Entry("q314_build_knn_graph", q314BuildKnnGraph, q314Oracle),
+    Entry("q315_hubness_audit", q315HubnessAudit, q315Oracle),
+    Entry("q344_label_propagation", q344LabelPropagation, q344Oracle),
+    Entry("q345_knn_triangles", q345TriangleCensus, q345Oracle),
+    Entry("q348_centroid_auc", q348CentroidAuc, q348Oracle),
+    Entry("q349_centroid_maintain", q349CentroidMaintain, q349Oracle),
+    Entry("q351_mrr_eval", q351MrrEval, q351Oracle),
+    Entry("q353_conformal_sets", q353ConformalCalibration, q353Oracle),
+    Entry("q307_random_projection", q307RandomProjection, q307Oracle),
+    Entry("q303_ndcg_eval", q303NdcgEval, q303Oracle),
+    Entry("q300_bitext_margin", q300BitextMarginMining, q300Oracle),
+    Entry("q297_ivf_list_balance", q297IvfListBalance, q297Oracle),
+    Entry("q292_kcenter_coreset", q292KCenterCoreset, q292Oracle),
+    Entry("q291_ivf_pq_ann", q291IvfPqAnn, q291Oracle),
+    Entry("q288_label_separation", q288LabelSeparation, q288Oracle),
+    Entry("q285_rank_fusion", q285RankFusion, q285Oracle),
+    Entry("q284_maxsim_retrieval", q284MaxSimRetrieval, q284Oracle),
+    Entry("q277_matryoshka_overlap", q277MatryoshkaOverlap, q277Oracle),
+    Entry("q273_hard_negatives", q273HardNegatives, q273Oracle),
+    Entry("q272_pq_ann", q272PqAnn, q272Oracle),
+    Entry("q229_embedding_audit", q229EmbeddingAudit, q229Oracle),
+    Entry("q211_power_iteration", q211PowerIteration, q211Oracle),
+    Entry("q182_cluster_scatter", q182ClusterScatter, q182Oracle),
+    Entry("q58_dedup_embedding_lsh", q58EmbeddingDedupLsh, q58Oracle),
+    Entry("q51_similarity_ivf_topk", q51IvfTopK, q51Oracle),
+    Entry("q235_build_ivf_index", q235BuildIvfIndex, q235Oracle),
+    Entry("q241_ivf_recall", q241IvfRecall, q241Oracle),
+    Entry("q416_nprobe_curve", q416NprobeCurve, q416Oracle),
+    Entry("q245_ivf_drift", q245IvfDrift, q245Oracle),
+    Entry("q249_semantic_dedup", q249SemanticDedup, q249Oracle),
+    Entry("q166_filtered_ivf", q166FilteredIvf, q166Oracle),
+    Entry("q34_similarity_cosine_topk", q34CosineTopK, q34Oracle),
+    Entry("q156_filtered_ann", q156FilteredAnn, q156Oracle),
+    Entry("q35_similarity_ann_lsh", q35AnnLsh, q35Oracle),
+    Entry("q36_similarity_embedding_neardup", q36EmbeddingNearDup, q36Oracle),
+    Entry("q84_similarity_ann_batch", q84AnnBatch, q84Oracle),
+    Entry("q86_kmeans_step", q86KmeansStep, q86Oracle),
+    Entry("q113_similarity_quantized", q113QuantizedTopK, q113Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -121,13 +122,8 @@ object Skew {
            AS skew_factor
        FROM k"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q103_skew_salted_agg" -> q103SaltedAgg _,
-    "q104_skew_salted_join" -> q104SaltedJoin _,
-    "q188_join_key_skew" -> q188JoinKeySkew _)
-
-  val oracles: Map[String, String] = Map(
-    "q103_skew_salted_agg" -> q103Oracle,
-    "q104_skew_salted_join" -> q104Oracle,
-    "q188_join_key_skew" -> q188Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q103_skew_salted_agg", q103SaltedAgg, q103Oracle),
+    Entry("q104_skew_salted_join", q104SaltedJoin, q104Oracle),
+    Entry("q188_join_key_skew", q188JoinKeySkew, q188Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.expressions.Window
@@ -305,15 +306,9 @@ object Temporal {
               CAST(max(overlap_us) AS BIGINT) AS max_overlap_us
        FROM j"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q71_asof_join" -> q71AsofJoin _,
-    "q72_range_join" -> q72RangeJoin _,
-    "q217_asof_tolerance" -> q217AsofTolerance _,
-    "q259_interval_overlap" -> q259IntervalOverlap _)
-
-  val oracles: Map[String, String] = Map(
-    "q71_asof_join" -> q71Oracle,
-    "q72_range_join" -> q72Oracle,
-    "q217_asof_tolerance" -> q217Oracle,
-    "q259_interval_overlap" -> q259Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q71_asof_join", q71AsofJoin, q71Oracle),
+    Entry("q72_range_join", q72RangeJoin, q72Oracle),
+    Entry("q217_asof_tolerance", q217AsofTolerance, q217Oracle),
+    Entry("q259_interval_overlap", q259IntervalOverlap, q259Oracle))
 }

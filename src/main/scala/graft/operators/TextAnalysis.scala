@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Entry
 import graft.sources.Tables
 
 import org.apache.spark.sql.expressions.Window
@@ -4094,8 +4095,7 @@ object TextAnalysis {
       buildInvIndex(spark, d))
 
   /** The postings build over an arbitrary (doc_id, text) frame — shared
-    * by the driven q375 build and the SkewBenchIndex rehearsal (which
-    * feeds it a planted Zipf-head stop word).
+    * by the driven q375 build and the planted Zipf-head stop-word spec.
     */
   private[graft] def invIndexOf(docs: DataFrame): DataFrame =
     docs
@@ -4194,7 +4194,7 @@ object TextAnalysis {
     * LEB128 cost model) quantifies the win per list. Audited on the 20
     * highest-df terms — deliberately the LONGEST lists, where encoding
     * matters and where the densest gaps give the best ratios (the
-    * hot-term direction SkewBenchIndex rehearses). Cost model exact:
+    * hot-term direction SCALE.md's index rehearsal measured). Cost model exact:
     * bits(v) = length of v's binary string (no log2 doubles), first
     * posting charged 64 bits (10 varint bytes). ZERO text scans: everything rides the stored
     * th-bucketed postings; the per-term lag window partitions on th.
@@ -4569,133 +4569,68 @@ object TextAnalysis {
          CAST(coll * 1000000 // (CAST(n_tokens AS HUGEINT) * (n_tokens - 1)) AS BIGINT) AS simpson_ppm
        FROM agg ORDER BY source"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q394_missing_mass" -> q394MissingMass _,
-    "q385_rake_keywords" -> q385RakeKeywords _,
-    "q377_inv_index_maintain" -> q377InvIndexMaintain _,
-    "q374_classifier_f1" -> q374ClassifierF1 _,
-    "q401_build_nb_predictions" -> q401BuildNbPredictions _,
-    "q403_posting_compression" -> q403PostingCompression _,
-    "q410_percolate" -> q410Percolate _,
-    "q411_roaring_sizing" -> q411RoaringSizing _,
-    "q375_build_inv_index" -> q375BuildInvIndex _,
-    "q376_index_probe_topk" -> q376IndexProbeTopk _,
-    "q364_kneser_ney" -> q364KneserNey _,
-    "q367_phrase_search" -> q367PhraseSearch _,
-    "q329_active_learning" -> q329ActiveLearning _,
-    "q326_loo_influence" -> q326LooInfluence _,
-    "q327_mcnemar_rules" -> q327McnemarRules _,
-    "q321_calibration_bins" -> q321CalibrationBins _,
-    "q338_isotonic_calibration" -> q338IsotonicCalibration _,
-    "q318_negative_sampling" -> q318NegativeSampling _,
-    "q319_vocab_truncation" -> q319VocabTruncation _,
-    "q306_perceptron_rounds" -> q306PerceptronRounds _,
-    "q308_heaps_growth" -> q308HeapsGrowth _,
-    "q309_jsd_matrix" -> q309JsdMatrix _,
-    "q311_source_gram_overlap" -> q311SourceGramOverlap _,
-    "q301_contamination_matrix" -> q301ContaminationMatrix _,
-    "q287_dsir_lift" -> q287DsirLift _,
-    "q286_build_doc_lm" -> q286BuildDocLm _,
-    "q281_threshold_sweep" -> q281ThresholdSweep _,
-    "q276_bm25_topk" -> q276Bm25TopK _,
-    "q278_perplexity_buckets" -> q278PerplexityBuckets _,
-    "q274_tokenizer_fertility" -> q274TokenizerFertility _,
-    "q266_zipf_slope" -> q266ZipfSlope _,
-    "q267_stopword_induction" -> q267StopwordInduction _,
-    "q257_vocab_coverage" -> q257VocabCoverage _,
-    "q250_lm_maintain" -> q250LmMaintain _,
-    "q252_langid_agreement" -> q252LangIdAgreement _,
-    "q253_char_entropy" -> q253CharEntropy _,
-    "q238_naive_bayes_langid" -> q238NaiveBayesLangId _,
-    "q236_build_bigram_lm" -> q236BuildBigramLm _,
-    "q230_importance_weights" -> q230ImportanceWeights _,
-    "q228_bigram_lm_score" -> q228BigramLmScore _,
-    "q210_bpe_merges" -> q210BpeMerges _,
-    "q183_ngram_novelty" -> q183NgramNovelty _,
-    "q173_oov_rate" -> q173OovRate _,
-    "q163_term_drift" -> q163TermDrift _,
-    "q164_vocab_growth" -> q164VocabGrowth _,
-    "q167_pmi_collocations" -> q167PmiCollocations _,
-    "q152_paragraph_dedup" -> q152ParagraphDedup _,
-    "q133_wordpiece_tokenize" -> q133WordpieceTokenize _,
-    "q121_strip_markup" -> q121StripMarkup _,
-    "q105_text_vocab_topk" -> q105VocabTopK _,
-    "q94_text_repetition" -> q94TextRepetition _,
-    "q95_text_decontamination" -> q95Decontamination _,
-    "q79_chunk_documents" -> q79ChunkDocuments _,
-    "q80_pii_redact" -> q80PiiRedact _,
-    "q334_luhn_scan" -> q334LuhnScan _,
-    "q336_stupid_backoff" -> q336StupidBackoff _,
-    "q70_text_normalize" -> q70TextNormalize _,
-    "q65_text_lang_id_ngram" -> q65LangIdNgram _,
-    "q66_text_tfidf_topterms" -> q66TfIdfTopTerms _,
-    "q37_text_lang_id" -> q37LangId _,
-    "q38_text_quality_score" -> q38QualityScore _,
-    "q39_text_token_count" -> q39TokenCount _,
-    "q40_text_fingerprint" -> q40Fingerprint _)
-
-  val oracles: Map[String, String] = Map(
-    "q394_missing_mass" -> q394Oracle,
-    "q385_rake_keywords" -> q385Oracle,
-    "q377_inv_index_maintain" -> q377Oracle,
-    "q374_classifier_f1" -> q374Oracle,
-    "q401_build_nb_predictions" -> q401Oracle,
-    "q403_posting_compression" -> q403Oracle,
-    "q410_percolate" -> q410Oracle,
-    "q411_roaring_sizing" -> q411Oracle,
-    "q375_build_inv_index" -> q375Oracle,
-    "q376_index_probe_topk" -> q376Oracle,
-    "q364_kneser_ney" -> q364Oracle,
-    "q367_phrase_search" -> q367Oracle,
-    "q329_active_learning" -> q329Oracle,
-    "q326_loo_influence" -> q326Oracle,
-    "q327_mcnemar_rules" -> q327Oracle,
-    "q321_calibration_bins" -> q321Oracle,
-    "q338_isotonic_calibration" -> q338Oracle,
-    "q318_negative_sampling" -> q318Oracle,
-    "q319_vocab_truncation" -> q319Oracle,
-    "q306_perceptron_rounds" -> q306Oracle,
-    "q308_heaps_growth" -> q308Oracle,
-    "q309_jsd_matrix" -> q309Oracle,
-    "q311_source_gram_overlap" -> q311Oracle,
-    "q301_contamination_matrix" -> q301Oracle,
-    "q287_dsir_lift" -> q287Oracle,
-    "q286_build_doc_lm" -> q286Oracle,
-    "q281_threshold_sweep" -> q281Oracle,
-    "q276_bm25_topk" -> q276Oracle,
-    "q278_perplexity_buckets" -> q278Oracle,
-    "q274_tokenizer_fertility" -> q274Oracle,
-    "q266_zipf_slope" -> q266Oracle,
-    "q267_stopword_induction" -> q267Oracle,
-    "q257_vocab_coverage" -> q257Oracle,
-    "q250_lm_maintain" -> q250Oracle,
-    "q252_langid_agreement" -> q252Oracle,
-    "q253_char_entropy" -> q253Oracle,
-    "q238_naive_bayes_langid" -> q238Oracle,
-    "q236_build_bigram_lm" -> q236Oracle,
-    "q230_importance_weights" -> q230Oracle,
-    "q228_bigram_lm_score" -> q228Oracle,
-    "q210_bpe_merges" -> q210Oracle,
-    "q183_ngram_novelty" -> q183Oracle,
-    "q173_oov_rate" -> q173Oracle,
-    "q163_term_drift" -> q163Oracle,
-    "q164_vocab_growth" -> q164Oracle,
-    "q167_pmi_collocations" -> q167Oracle,
-    "q152_paragraph_dedup" -> q152Oracle,
-    "q133_wordpiece_tokenize" -> q133Oracle,
-    "q121_strip_markup" -> q121Oracle,
-    "q105_text_vocab_topk" -> q105Oracle,
-    "q94_text_repetition" -> q94Oracle,
-    "q95_text_decontamination" -> q95Oracle,
-    "q79_chunk_documents" -> q79Oracle,
-    "q80_pii_redact" -> q80Oracle,
-    "q334_luhn_scan" -> q334Oracle,
-    "q336_stupid_backoff" -> q336Oracle,
-    "q70_text_normalize" -> q70Oracle,
-    "q65_text_lang_id_ngram" -> q65Oracle,
-    "q66_text_tfidf_topterms" -> q66Oracle,
-    "q37_text_lang_id" -> q37Oracle,
-    "q38_text_quality_score" -> q38Oracle,
-    "q39_text_token_count" -> q39Oracle,
-    "q40_text_fingerprint" -> q40Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q394_missing_mass", q394MissingMass, q394Oracle),
+    Entry("q385_rake_keywords", q385RakeKeywords, q385Oracle),
+    Entry("q377_inv_index_maintain", q377InvIndexMaintain, q377Oracle),
+    Entry("q374_classifier_f1", q374ClassifierF1, q374Oracle),
+    Entry("q401_build_nb_predictions", q401BuildNbPredictions, q401Oracle),
+    Entry("q403_posting_compression", q403PostingCompression, q403Oracle),
+    Entry("q410_percolate", q410Percolate, q410Oracle),
+    Entry("q411_roaring_sizing", q411RoaringSizing, q411Oracle),
+    Entry("q375_build_inv_index", q375BuildInvIndex, q375Oracle),
+    Entry("q376_index_probe_topk", q376IndexProbeTopk, q376Oracle),
+    Entry("q364_kneser_ney", q364KneserNey, q364Oracle),
+    Entry("q367_phrase_search", q367PhraseSearch, q367Oracle),
+    Entry("q329_active_learning", q329ActiveLearning, q329Oracle),
+    Entry("q326_loo_influence", q326LooInfluence, q326Oracle),
+    Entry("q327_mcnemar_rules", q327McnemarRules, q327Oracle),
+    Entry("q321_calibration_bins", q321CalibrationBins, q321Oracle),
+    Entry("q338_isotonic_calibration", q338IsotonicCalibration, q338Oracle),
+    Entry("q318_negative_sampling", q318NegativeSampling, q318Oracle),
+    Entry("q319_vocab_truncation", q319VocabTruncation, q319Oracle),
+    Entry("q306_perceptron_rounds", q306PerceptronRounds, q306Oracle),
+    Entry("q308_heaps_growth", q308HeapsGrowth, q308Oracle),
+    Entry("q309_jsd_matrix", q309JsdMatrix, q309Oracle),
+    Entry("q311_source_gram_overlap", q311SourceGramOverlap, q311Oracle),
+    Entry("q301_contamination_matrix", q301ContaminationMatrix, q301Oracle),
+    Entry("q287_dsir_lift", q287DsirLift, q287Oracle),
+    Entry("q286_build_doc_lm", q286BuildDocLm, q286Oracle),
+    Entry("q281_threshold_sweep", q281ThresholdSweep, q281Oracle),
+    Entry("q276_bm25_topk", q276Bm25TopK, q276Oracle),
+    Entry("q278_perplexity_buckets", q278PerplexityBuckets, q278Oracle),
+    Entry("q274_tokenizer_fertility", q274TokenizerFertility, q274Oracle),
+    Entry("q266_zipf_slope", q266ZipfSlope, q266Oracle),
+    Entry("q267_stopword_induction", q267StopwordInduction, q267Oracle),
+    Entry("q257_vocab_coverage", q257VocabCoverage, q257Oracle),
+    Entry("q250_lm_maintain", q250LmMaintain, q250Oracle),
+    Entry("q252_langid_agreement", q252LangIdAgreement, q252Oracle),
+    Entry("q253_char_entropy", q253CharEntropy, q253Oracle),
+    Entry("q238_naive_bayes_langid", q238NaiveBayesLangId, q238Oracle),
+    Entry("q236_build_bigram_lm", q236BuildBigramLm, q236Oracle),
+    Entry("q230_importance_weights", q230ImportanceWeights, q230Oracle),
+    Entry("q228_bigram_lm_score", q228BigramLmScore, q228Oracle),
+    Entry("q210_bpe_merges", q210BpeMerges, q210Oracle),
+    Entry("q183_ngram_novelty", q183NgramNovelty, q183Oracle),
+    Entry("q173_oov_rate", q173OovRate, q173Oracle),
+    Entry("q163_term_drift", q163TermDrift, q163Oracle),
+    Entry("q164_vocab_growth", q164VocabGrowth, q164Oracle),
+    Entry("q167_pmi_collocations", q167PmiCollocations, q167Oracle),
+    Entry("q152_paragraph_dedup", q152ParagraphDedup, q152Oracle),
+    Entry("q133_wordpiece_tokenize", q133WordpieceTokenize, q133Oracle),
+    Entry("q121_strip_markup", q121StripMarkup, q121Oracle),
+    Entry("q105_text_vocab_topk", q105VocabTopK, q105Oracle),
+    Entry("q94_text_repetition", q94TextRepetition, q94Oracle),
+    Entry("q95_text_decontamination", q95Decontamination, q95Oracle),
+    Entry("q79_chunk_documents", q79ChunkDocuments, q79Oracle),
+    Entry("q80_pii_redact", q80PiiRedact, q80Oracle),
+    Entry("q334_luhn_scan", q334LuhnScan, q334Oracle),
+    Entry("q336_stupid_backoff", q336StupidBackoff, q336Oracle),
+    Entry("q70_text_normalize", q70TextNormalize, q70Oracle),
+    Entry("q65_text_lang_id_ngram", q65LangIdNgram, q65Oracle),
+    Entry("q66_text_tfidf_topterms", q66TfIdfTopTerms, q66Oracle),
+    Entry("q37_text_lang_id", q37LangId, q37Oracle),
+    Entry("q38_text_quality_score", q38QualityScore, q38Oracle),
+    Entry("q39_text_token_count", q39TokenCount, q39Oracle),
+    Entry("q40_text_fingerprint", q40Fingerprint, q40Oracle))
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.core.Entry
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
@@ -1781,8 +1783,8 @@ object StreamingOps {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     // the flag decision joins the per-hash df SUMMARY, not raw index
     // rows — immune to a universal-boilerplate hot fingerprint
-    // (SkewBenchWinnow: raw join grows linearly with corpus, this stays
-    // flat)
+    // (SCALE.md's winnow rehearsal: raw join grows linearly with corpus,
+    // this stays flat)
     val idx = graft.operators.Dedup.winnowIndexTable(spark, d)
       .groupBy(col("sh")).agg(count(lit(1)).as("df"))
     val base = graft.sources.Tables.documents(spark, d)
@@ -2183,67 +2185,35 @@ object StreamingOps {
        FROM res ORDER BY kind"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q372_stream_bloom_admission" -> q372StreamBloomAdmission _,
-    "q365_stream_quantile_monitor" -> q365StreamQuantileMonitor _,
-    "q333_stream_lsh_admission" -> q333StreamLshAdmission _,
-    "q325_stream_winnow_admission" -> q325StreamWinnowAdmission _,
-    "q312_stream_hll_distinct" -> q312StreamHllDistinct _,
-    "q299_stream_quota_admission" -> q299StreamQuotaAdmission _,
-    "q346_stream_packing" -> q346StreamPacking _,
-    "q354_stream_cusum_alarm" -> q354StreamCusumAlarm _,
-    "q383_stream_seasonal_monitor" -> q383StreamSeasonalMonitor _,
-    "q391_stream_psi_monitor" -> q391StreamPsiMonitor _,
-    "q399_stream_hysteresis_alarm" -> q399StreamHysteresisAlarm _,
-    "q406_stream_token_bucket" -> q406StreamTokenBucket _,
-    "q419_stream_heartbeat" -> q419StreamHeartbeat _,
-    "q290_stream_lm_gate" -> q290StreamLmGate _,
-    "q280_stream_ivf_monitor" -> q280StreamIvfMonitor _,
-    "q265_stream_window_topk" -> q265StreamWindowTopk _,
-    "q213_stream_anti_denylist" -> q213StreamAntiDenylist _,
-    "q190_stream_daily_actives" -> q190StreamDailyActives _,
-    "q143_stream_outer_join" -> q143StreamOuterJoin _,
-    "q136_transform_with_state" -> q136TransformWithState _,
-    "q43_stream_tumbling_window" -> q43StreamTumbling _,
-    "q44_stream_session_window" -> q44StreamSession _,
-    "q45_stream_dedup" -> q45StreamDedup _,
-    "q46_stream_stateful" -> q46StreamStateful _,
-    "q52_stream_sliding_window" -> q52StreamSliding _,
-    "q78_stream_static_join" -> q78StreamStaticJoin _,
-    "q87_stream_sessionize" -> q87Sessionize _,
-    "q92_stream_foreach_sink" -> q92ForeachBatchSink _,
-    "q248_stream_neardup_filter" -> q248StreamNearDupFilter _,
-    "q110_stream_stream_join" -> q110StreamStreamJoin _)
-
-  val oracles: Map[String, String] = Map(
-    "q372_stream_bloom_admission" -> q372Oracle,
-    "q365_stream_quantile_monitor" -> q365Oracle,
-    "q333_stream_lsh_admission" -> q333Oracle,
-    "q325_stream_winnow_admission" -> q325Oracle,
-    "q312_stream_hll_distinct" -> q312Oracle,
-    "q299_stream_quota_admission" -> q299Oracle,
-    "q346_stream_packing" -> q346Oracle,
-    "q354_stream_cusum_alarm" -> q354Oracle,
-    "q383_stream_seasonal_monitor" -> q383Oracle,
-    "q391_stream_psi_monitor" -> q391Oracle,
-    "q399_stream_hysteresis_alarm" -> q399Oracle,
-    "q406_stream_token_bucket" -> q406Oracle,
-    "q419_stream_heartbeat" -> q419Oracle,
-    "q290_stream_lm_gate" -> q290Oracle,
-    "q280_stream_ivf_monitor" -> q280Oracle,
-    "q265_stream_window_topk" -> q265Oracle,
-    "q213_stream_anti_denylist" -> q213Oracle,
-    "q190_stream_daily_actives" -> q190Oracle,
-    "q143_stream_outer_join" -> q143Oracle,
-    "q136_transform_with_state" -> q136Oracle,
-    "q43_stream_tumbling_window" -> q43Oracle,
-    "q44_stream_session_window" -> q44Oracle,
-    "q45_stream_dedup" -> q45Oracle,
-    "q46_stream_stateful" -> q46Oracle,
-    "q52_stream_sliding_window" -> q52Oracle,
-    "q78_stream_static_join" -> q78Oracle,
-    "q87_stream_sessionize" -> q87Oracle,
-    "q92_stream_foreach_sink" -> q92Oracle,
-    "q248_stream_neardup_filter" -> q248Oracle,
-    "q110_stream_stream_join" -> q110Oracle)
+  val entries: Seq[Entry] = Seq(
+    Entry("q372_stream_bloom_admission", q372StreamBloomAdmission, q372Oracle),
+    Entry("q365_stream_quantile_monitor", q365StreamQuantileMonitor, q365Oracle),
+    Entry("q333_stream_lsh_admission", q333StreamLshAdmission, q333Oracle),
+    Entry("q325_stream_winnow_admission", q325StreamWinnowAdmission, q325Oracle),
+    Entry("q312_stream_hll_distinct", q312StreamHllDistinct, q312Oracle),
+    Entry("q299_stream_quota_admission", q299StreamQuotaAdmission, q299Oracle),
+    Entry("q346_stream_packing", q346StreamPacking, q346Oracle),
+    Entry("q354_stream_cusum_alarm", q354StreamCusumAlarm, q354Oracle),
+    Entry("q383_stream_seasonal_monitor", q383StreamSeasonalMonitor, q383Oracle),
+    Entry("q391_stream_psi_monitor", q391StreamPsiMonitor, q391Oracle),
+    Entry("q399_stream_hysteresis_alarm", q399StreamHysteresisAlarm, q399Oracle),
+    Entry("q406_stream_token_bucket", q406StreamTokenBucket, q406Oracle),
+    Entry("q419_stream_heartbeat", q419StreamHeartbeat, q419Oracle),
+    Entry("q290_stream_lm_gate", q290StreamLmGate, q290Oracle),
+    Entry("q280_stream_ivf_monitor", q280StreamIvfMonitor, q280Oracle),
+    Entry("q265_stream_window_topk", q265StreamWindowTopk, q265Oracle),
+    Entry("q213_stream_anti_denylist", q213StreamAntiDenylist, q213Oracle),
+    Entry("q190_stream_daily_actives", q190StreamDailyActives, q190Oracle),
+    Entry("q143_stream_outer_join", q143StreamOuterJoin, q143Oracle),
+    Entry("q136_transform_with_state", q136TransformWithState, q136Oracle),
+    Entry("q43_stream_tumbling_window", q43StreamTumbling, q43Oracle),
+    Entry("q44_stream_session_window", q44StreamSession, q44Oracle),
+    Entry("q45_stream_dedup", q45StreamDedup, q45Oracle),
+    Entry("q46_stream_stateful", q46StreamStateful, q46Oracle),
+    Entry("q52_stream_sliding_window", q52StreamSliding, q52Oracle),
+    Entry("q78_stream_static_join", q78StreamStaticJoin, q78Oracle),
+    Entry("q87_stream_sessionize", q87Sessionize, q87Oracle),
+    Entry("q92_stream_foreach_sink", q92ForeachBatchSink, q92Oracle),
+    Entry("q248_stream_neardup_filter", q248StreamNearDupFilter, q248Oracle),
+    Entry("q110_stream_stream_join", q110StreamStreamJoin, q110Oracle))
 }

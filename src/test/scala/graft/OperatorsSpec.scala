@@ -15,9 +15,13 @@ class OperatorsSpec extends SparkSuite {
   }
 
   test("every query runs and every oracle key exists in queries") {
-    val qs = SparkEntry.queries
-    assert(qs.size >= 108) // a module dropped from the catalog fails here
-    SparkEntry.oracleSql.keys.foreach(k => assert(qs.contains(k), s"oracle for unknown query $k"))
+    // names must be unique across the concatenated registries: a duplicate
+    // would silently drop one query from the name-keyed contract maps
+    val names = SparkEntry.entries.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, g) if g.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate catalog names: ${dups.mkString(", ")}")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(names.size == 421) // a module dropped from the catalog fails here
   }
 
   test("q01 pricing summary: group count and a pinned aggregate") {

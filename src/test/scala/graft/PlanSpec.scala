@@ -142,7 +142,7 @@ class PlanSpec extends SparkSuite {
       case other =>
         (other.children ++ other.subqueries).map(docScans).sum
     }
-    val df = graft.operators.Curation.queries("q150_training_pipeline")(spark, sf)
+    val df = graft.SparkEntry.queries("q150_training_pipeline")(spark, sf)
     val n = docScans(df.queryExecution.executedPlan)
     spark.catalog.clearCache()
     assert(n <= 3, s"documents scanned $n times — the stats fork is back")
@@ -382,14 +382,14 @@ class PlanSpec extends SparkSuite {
     // HashPartitioning(user_id) satisfies the (user_id, sid) clustering, so
     // the per-session windows must not add an exchange; the only shuffles
     // are the user one and the final single-row aggregate's
-    val p = planOf(graft.operators.EventAnalytics.queries("q184_session_funnel")(spark, sf))
+    val p = planOf(graft.SparkEntry.queries("q184_session_funnel")(spark, sf))
     val n = "(?i)Exchange hashpartitioning|Exchange SinglePartition".r
       .findAllIn(p).length
     assert(n <= 2, s"$n exchanges in q184 plan:\n$p")
   }
 
   test("q212: aggregation on the bucketed key runs with zero exchanges") {
-    val df = graft.operators.EtlQueries.queries("q212_bucketed_agg")(spark, sf)
+    val df = graft.SparkEntry.queries("q212_bucketed_agg")(spark, sf)
     val p = planOf(df)
     assert(!p.contains("Exchange hashpartitioning"),
       s"bucketed aggregate still shuffles:\n$p")
@@ -397,13 +397,13 @@ class PlanSpec extends SparkSuite {
 
   test("q195: the merge hint overrides the broadcast default") {
     // part IS broadcast-sized — the hint must still force SortMergeJoin
-    val p = planOf(graft.operators.Relational.queries("q195_join_hints")(spark, sf))
+    val p = planOf(graft.SparkEntry.queries("q195_join_hints")(spark, sf))
     assert(p.contains("SortMergeJoin"), s"no SortMergeJoin in:\n$p")
     assert(!p.contains("BroadcastHashJoin"), s"broadcast slipped through:\n$p")
   }
 
   test("q170: the skyline frontier joins back as a broadcast, not a shuffle") {
-    val p = planOf(graft.operators.Relational.queries("q170_skyline_pareto")(spark, sf))
+    val p = planOf(graft.SparkEntry.queries("q170_skyline_pareto")(spark, sf))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join in:\n$p")
   }
 }

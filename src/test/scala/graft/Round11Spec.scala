@@ -805,6 +805,22 @@ class Round11Spec extends SparkSuite {
     }
   }
 
+  test("q375 postings under a planted Zipf-head stop word: no hot-posting row lost") {
+    // a stop word appended `reps` times to EVERY document gives one term
+    // whose posting list is exactly corpus-sized: its df must equal the
+    // doc count and its token mass reps · doc count
+    val reps = 3
+    val corpus = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), concat(col("text"), lit(" zzstopword" * reps)).as("text"))
+    val nDocs = corpus.count()
+    val hot = graft.operators.TextAnalysis.invIndexOf(corpus)
+      .groupBy(col("th"))
+      .agg(count(lit(1)).as("df"), expr("cast(sum(tf) as bigint)").as("mass"))
+      .orderBy(col("df").desc, col("th").asc).limit(1).collect()(0)
+    assert(hot.getAs[Long]("df") === nDocs, "the hot posting list lost rows")
+    assert(hot.getAs[Long]("mass") === reps * nDocs, "the hot term's token mass is wrong")
+  }
+
   // ------------------------------------------------------------- q377
   test("q377: delta-merged index equals the from-scratch rebuild over base+batch") {
     import spark.implicits._

@@ -88,9 +88,9 @@ class Round14Spec extends SparkSuite {
   }
 
   // ------------------------------------------ streaming state laws
-  // The StateMetrics capture (StreamStateBench's instrument) pinned at
-  // fixture scale: resident state must follow KEY populations exactly —
-  // one row per stateful group/key — and stream-stream join state must
+  // The StateMetrics capture pinned at fixture scale: resident state must
+  // follow KEY populations exactly — one row per stateful group/key —
+  // and stream-stream join state must
   // be watermark-EVICTED, never retained for the stream's length. These
   // are the laws the sf0.1/sf1 rehearsal in SCALE.md measures at scale;
   // a state leak (rows tracking events past keys) fails here first.

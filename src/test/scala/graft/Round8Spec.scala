@@ -201,6 +201,20 @@ class Round8Spec extends SparkSuite {
     assert(row1 === ((1L, 20L, 16L)))
   }
 
+  test("substringDupCoverage: a boilerplate span shared by EVERY doc covers every doc") {
+    // the hot-key case: the span's K-grams each occur once per document,
+    // so one gram key carries the whole corpus; every doc must still be
+    // reported, with at least the span's tokens covered
+    val span = Dedup.Q270Span
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), concat(col("text"), lit(" " + span)).as("text"))
+    val nDocs = docs.count()
+    val out = Dedup.substringDupCoverage(docs, Dedup.Q270K)
+    assert(out.count() === nDocs, "a document vanished from the coverage output")
+    assert(out.filter(col("covered") < span.split(" ").length).count() === 0L,
+      "a document under-reports the shared span: hot-gram rows were lost")
+  }
+
   // ------------------------------------------------------------- q272
   test("q272 PQ: codebook shape, code range, and identical-vector code equality") {
     import graft.sources.Tables

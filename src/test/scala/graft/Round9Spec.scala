@@ -13,11 +13,11 @@ class Round9Spec extends SparkSuite {
 
   // ------------------------------------------------------------- q282
   test("q282: planner outputs are exact integers matching the pow derivation") {
-    val rows = graft.operators.Dedup.queries("q282_lsh_planner")(spark, sf).collect()
+    val rows = graft.SparkEntry.queries("q282_lsh_planner")(spark, sf).collect()
     assert(rows.length === 20)
     // no double-typed column anywhere in the output — the r8 verdict's
     // "555fc28 class" must stay out of this query
-    val df = graft.operators.Dedup.queries("q282_lsh_planner")(spark, sf)
+    val df = graft.SparkEntry.queries("q282_lsh_planner")(spark, sf)
     assert(!df.schema.exists(_.dataType == DoubleType),
       s"q282 re-grew a double output column: ${df.schema.treeString}")
     rows.foreach { r =>
@@ -227,6 +227,28 @@ class Round9Spec extends SparkSuite {
     // zero hits is a hard invariant, not a probabilistic expectation
     assert(rows("novel").getAs[Long]("n_hit_pairs") === 0L,
       "a synthetic novel doc matched a corpus fingerprint")
+  }
+
+  test("winnow admission under a universal boilerplate fingerprint: every copy flags") {
+    // every corpus doc carries the q305 span, so one fingerprint's posting
+    // list is corpus-sized; the skew-immune df-summary join must still
+    // flag every batch doc, each an exact corpus copy
+    import graft.operators.Dedup
+    val corpus = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), concat(col("text"), lit(" " + Dedup.Q305Span)).as("text"))
+    val nDocs = corpus.count()
+    val dfSummary = Dedup.winnowSelect(corpus, Dedup.Q305K, Dedup.Q305W)
+      .groupBy(col("sh")).agg(count(lit(1)).as("df"))
+    assert(dfSummary.agg(max(col("df"))).collect()(0).getLong(0) >= nDocs,
+      "no fingerprint is shared by every document")
+    val batch = corpus.filter(col("doc_id") < 100)
+      .select((col("doc_id") + 500000000L).as("doc_id"), col("text"))
+    val flagged = Dedup.winnowSelect(batch, Dedup.Q305K, Dedup.Q305W)
+      .select(col("doc_id"), col("sh")).distinct()
+      .join(dfSummary, "sh").select(col("doc_id")).distinct()
+    assert(batch.count() > 0)
+    assert(batch.select(col("doc_id")).join(flagged, Seq("doc_id"), "left_anti").count() === 0L,
+      "an exact copy did not flag: hot-key rows were lost")
   }
 
   // ------------------------------------------------------------- q319

@@ -87,4 +87,34 @@ class SamplingSpec extends SparkSuite {
       assert(r.getAs[Boolean]("sample_ok"), s"stratum ${r.getString(0)} outside bounds")
     }
   }
+
+  test("tokenPrefixSum: exact prefix sums under token-mass and row-count skew") {
+    // q342's two-phase prefix sum against the distributions that could
+    // break it: uniform hash buckets (the shipped shape), one document
+    // carrying 10^6× its tokens (mass skew), and every row in one bucket
+    // (row skew, the single-window worst case). Each must equal the
+    // sequential prefix sum over (bucket, h, doc_id) — no token lost or
+    // double-counted in the hot bucket.
+    val base = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tok"))
+      .withColumn("h", expr(
+        "CAST(conv(substring(md5(concat('pk#', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"))
+    val uniform = base.withColumn("bucket", expr("h div 1099511627776"))
+    val cases = Seq(
+      "uniform" -> uniform,
+      "mass skew" -> uniform.withColumn("n_tok",
+        expr("CASE WHEN doc_id = 0 THEN n_tok * 1000000 ELSE n_tok END")),
+      "row skew" -> base.withColumn("bucket", lit(0L)))
+    cases.foreach { case (label, df) =>
+      val in = df.select("bucket", "h", "doc_id", "n_tok").as[(Long, Long, Long, Long)]
+        .collect().sortBy(r => (r._1, r._2, r._3))
+      val expected = in.map(_._4).scanLeft(0L)(_ + _).tail
+      val got = Sampling.tokenPrefixSum(df)
+        .select("bucket", "h", "doc_id", "cum", "st").as[(Long, Long, Long, Long, Long)]
+        .collect().sortBy(r => (r._1, r._2, r._3))
+      assert(got.map(_._3).toSeq === in.map(_._3).toSeq, s"$label: rows lost or duplicated")
+      assert(got.map(_._4).toSeq === expected.toSeq, s"$label: cum is not the prefix sum")
+      assert(got.zip(in).forall { case (g, i) => g._5 == g._4 - i._4 }, s"$label: st != cum - n_tok")
+    }
+  }
 }

@@ -27,25 +27,20 @@ def fold(side):
                     mins[q] = min(mins.get(q, 1e18), v)
     return mins
 
-a = fold("r13")
+a = fold("base")
 b = fold("cur")
 shared = sorted(set(a) & set(b))
 ta = sum(a[q] for q in shared)
 tb = sum(b[q] for q in shared)
-print(f"shared queries: {len(shared)}  (r13-only: {len(set(a)-set(b))}, cur-only: {len(set(b)-set(a))})")
-# Anchor-staleness guard (round-16 verdict item 3): the ratio series is
-# only comparable round-over-round while the anchor still covers ~all of
-# the current catalog. If the catalog grows (or the anchor stops running
-# queries), the shared fold silently shrinks and the headline ratio stops
-# measuring the same thing. Re-anchoring rule: when shared coverage drops
-# below 90% of the current catalog, re-anchor the worktree to the last
-# JUDGED round's HEAD and start a fresh ratio series in BASELINE.md.
+print(f"shared queries: {len(shared)}  (base-only: {len(set(a)-set(b))}, cur-only: {len(set(b)-set(a))})")
+# Coverage guard: the headline ratio only measures the catalog while the
+# base still runs ~all of the current queries. If the catalog grew past the
+# base (or base queries fail), the shared fold silently shrinks.
 if b and len(shared) < 0.9 * len(b):
-    print(f"\n*** ANCHOR STALE: shared fold covers {len(shared)}/{len(b)} "
-          f"current queries (<90%) — the headline ratio above is NOT "
-          f"comparable to prior rounds. Re-anchor .worktrees/r13 to the "
-          f"last judged round's HEAD and restart the series. ***")
-print(f"folded min totals over shared: r13 {ta:.1f} s  cur {tb:.1f} s  ratio {tb/ta:.3f}")
+    print(f"\n*** LOW COVERAGE: shared fold covers {len(shared)}/{len(b)} "
+          f"current queries (<90%) — the ratio below does not measure the "
+          f"whole catalog; pick a newer base commit. ***")
+print(f"folded min totals over shared: base {ta:.1f} s  cur {tb:.1f} s  ratio {tb/ta:.3f}")
 only_b = sorted(set(b) - set(a))
 if only_b:
     print(f"cur-only queries total: {sum(b[q] for q in only_b):.1f} s over {len(only_b)}")
@@ -57,7 +52,7 @@ for q in shared:
         rows.append((d, q, a[q], b[q]))
 rows.sort(reverse=True)
 print("\nper-query survivors (|delta| >= 0.15 s AND ratio >= 1.3x):")
-print(f"{'query':8} {'r13':>8} {'cur':>8} {'delta':>8} {'ratio':>6}")
+print(f"{'query':8} {'base':>8} {'cur':>8} {'delta':>8} {'ratio':>6}")
 for d, q, va, vb in rows:
     print(f"{q:8} {va:8.3f} {vb:8.3f} {d:+8.3f} {vb/max(va,1e-9):6.2f}")
 if not rows:

@@ -1,5 +1,9 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's DuckDB correctness gate."""
+"""Local replica of the DuckDB oracle correctness gate.
+
+Usage: python3 tools/compare_oracle.py <sf_dir> <verify_out_dir>
+Exits 1 if any query fails, including one with no output.
+"""
 import duckdb, json, sys, glob, os
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -10,11 +14,12 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem","ev
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+out_dirs = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
 ok = fail = 0
-for name in sorted(os.listdir(out_dir)):
+# every oracle key is checked, so a query whose output is missing (it threw)
+# counts as a failure instead of vanishing from the count
+for name in sorted(set(oracle) | out_dirs):
     path = os.path.join(out_dir, name)
-    if not os.path.isdir(path):
-        continue
     # coalesce(1) outputs can still split at spark.sql.files.maxRecordsPerFile
     # (5M rows) — read ALL parts in write order, not just the first
     files = sorted(glob.glob(f"{path}/*.parquet"))
@@ -74,4 +79,5 @@ for name in sorted(os.listdir(out_dir)):
     else:
         print(f"OK         {name}: rows={len(got_s)}")
         ok += 1
-print(f"\n{ok} ok, {fail} failed, {len([n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir,n)) and n not in oracle])} rows-only")
+print(f"\n{ok} ok, {fail} failed, {len(out_dirs - set(oracle))} rows-only")
+sys.exit(1 if fail else 0)

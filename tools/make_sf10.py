@@ -20,7 +20,7 @@ replicas, so the dedup/LSH/fingerprint certificate families run at sf10:
     simhash band bucket and grow the candidate-pair work 100x per 10x
     data — the all-duplicates SKEW regime, a different experiment
     (make_sf1 deliberately keeps that regime at 10 copies as the
-    adversarial sf1 arm; SkewBench owns the extreme). The cipher
+    adversarial sf1 arm; the skew rehearsals own the extreme). The cipher
     preserves length (n_chars stays exact), the space structure (tokens
     per doc, token lengths), and the within-replica duplicate structure
     (the base corpus's 8 exact-dup pairs stay dups inside every
