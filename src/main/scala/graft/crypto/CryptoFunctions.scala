@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions._
   */
 object CryptoFunctions extends Logging {
 
-  // One codec per key per executor JVM; inside Fernet, Cipher/Mac
-  // instances are thread-local and re-init'd per call (round 13 — a fresh
-  // getInstance() per row was the dominant constant in q27/q192), so this
-  // cache only avoids re-decoding the key per row.
+  // One codec per key per executor JVM. Each codec keeps one keyed
+  // Cipher/Mac/DRBG state per thread, so this cache is what makes that
+  // state live across rows: a codec built per row would re-key per row.
   @transient private lazy val codecs =
     new java.util.concurrent.ConcurrentHashMap[String, Fernet]()
 

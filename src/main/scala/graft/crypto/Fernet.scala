@@ -2,9 +2,9 @@ package graft.crypto
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-import java.security.{MessageDigest, SecureRandom}
+import java.security.SecureRandom
 import java.util.Base64
-import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
+import javax.crypto.spec.SecretKeySpec
 import javax.crypto.{Cipher, Mac}
 
 /** Fernet symmetric-token codec on `javax.crypto` only.
@@ -17,27 +17,25 @@ import javax.crypto.{Cipher, Mac}
   * 72-84), but unlike the reference — which discards the key at process exit,
   * making encryption one-way (SURVEY.md §0.2-4) — the key here is explicit so
   * round-trip decryption is possible and tested.
+  *
+  * All work runs on one [[Fernet.Kernel]] per thread, keyed once. A per-cell
+  * `Cipher.init`, or IVs drawn from one shared `SecureRandom` (NativePRNG
+  * serializes every `nextBytes` process-wide), would cap encryption at one
+  * core.
   */
 final class Fernet(keyBase64: String) extends Serializable {
-  @transient private lazy val keyBytes: Array[Byte] = Fernet.decodeB64Url(keyBase64)
-  @transient private lazy val signingKey = new SecretKeySpec(keyBytes.slice(0, 16), "HmacSHA256")
-  @transient private lazy val encryptionKey = new SecretKeySpec(keyBytes.slice(16, 32), "AES")
-  @transient private lazy val random = new SecureRandom()
-  // Cipher/Mac are NOT thread-safe but ARE reusable: a fresh
-  // getInstance() per row was the dominant constant in the per-row
-  // crypto queries (q27/q192 were the appendix's heaviest data-linear
-  // rows). One instance per executor thread, re-init'd per call (init
-  // is cheap; allocation + provider lookup is not).
-  @transient private lazy val cipherTL =
-    ThreadLocal.withInitial[Cipher](() => Cipher.getInstance("AES/CBC/PKCS5Padding"))
-  @transient private lazy val macTL =
-    ThreadLocal.withInitial[Mac](() => Mac.getInstance("HmacSHA256"))
+  @transient private lazy val kernel = {
+    val key = Fernet.decodeB64Url(keyBase64)
+    ThreadLocal.withInitial[Fernet.Kernel](() => new Fernet.Kernel(key))
+  }
 
   require(Fernet.decodeB64Url(keyBase64).length == 32,
     "Fernet key must be 32 bytes, urlsafe-base64 encoded")
 
-  def encrypt(plaintext: Array[Byte]): String =
-    encryptAt(plaintext, System.currentTimeMillis() / 1000L, nextIv())
+  def encrypt(plaintext: Array[Byte]): String = {
+    val k = kernel.get()
+    k.seal(plaintext, System.currentTimeMillis() / 1000L, k.ivs, k.nextIv())
+  }
 
   def encryptString(s: String): String = encrypt(s.getBytes(UTF_8))
 
@@ -45,36 +43,14 @@ final class Fernet(keyBase64: String) extends Serializable {
     * token bytes against the spec's structure.
     */
   private[graft] def encryptAt(plaintext: Array[Byte], timestampSec: Long, iv: Array[Byte]): String = {
-    val cipher = cipherTL.get()
-    cipher.init(Cipher.ENCRYPT_MODE, encryptionKey, new IvParameterSpec(iv))
-    val ciphertext = cipher.doFinal(plaintext)
-    val body = ByteBuffer.allocate(1 + 8 + 16 + ciphertext.length)
-      .put(0x80.toByte).putLong(timestampSec).put(iv).put(ciphertext).array()
-    val mac = macTL.get()
-    mac.init(signingKey)
-    val tag = mac.doFinal(body)
-    Fernet.encodeB64Url(body ++ tag)
+    require(iv.length == 16, "Fernet IV must be 16 bytes")
+    kernel.get().seal(plaintext, timestampSec, iv, 0)
   }
 
   /** Decrypt and verify a token; throws IllegalArgumentException on any
     * malformed/forged token (wrong version, bad HMAC, bad padding).
     */
-  def decrypt(token: String): Array[Byte] = {
-    val raw = Fernet.decodeB64Url(token)
-    require(raw.length >= 1 + 8 + 16 + 16 + 32, "Fernet token too short")
-    require(raw(0) == 0x80.toByte, "Unsupported Fernet token version")
-    val body = raw.slice(0, raw.length - 32)
-    val tag = raw.slice(raw.length - 32, raw.length)
-    val mac = macTL.get()
-    mac.init(signingKey)
-    val expected = mac.doFinal(body)
-    require(MessageDigest.isEqual(expected, tag), "Fernet HMAC verification failed")
-    val iv = raw.slice(9, 25)
-    val ciphertext = raw.slice(25, raw.length - 32)
-    val cipher = cipherTL.get()
-    cipher.init(Cipher.DECRYPT_MODE, encryptionKey, new IvParameterSpec(iv))
-    cipher.doFinal(ciphertext)
-  }
+  def decrypt(token: String): Array[Byte] = kernel.get().open(Fernet.decodeB64Url(token))
 
   def decryptString(token: String): String = new String(decrypt(token), UTF_8)
 
@@ -108,13 +84,7 @@ final class Fernet(keyBase64: String) extends Serializable {
   private[graft] def timestamp(token: String): Long = {
     val raw = Fernet.decodeB64Url(token)
     require(raw.length >= 9, "Fernet token too short")
-    ByteBuffer.wrap(raw.slice(1, 9)).getLong
-  }
-
-  private def nextIv(): Array[Byte] = {
-    val iv = new Array[Byte](16)
-    random.nextBytes(iv)
-    iv
+    ByteBuffer.wrap(raw, 1, 8).getLong
   }
 }
 
@@ -148,4 +118,87 @@ object Fernet {
 
   private[crypto] def decodeB64Url(s: String): Array[Byte] =
     Base64.getUrlDecoder.decode(s.trim)
+
+  private final val Header = 1 + 8 + 16 // version, timestamp, IV
+  private final val Block = 16
+  private final val Tag = 32
+
+  /** One thread's keyed state. `Cipher` and `Mac` are not thread-safe, so
+    * each thread owns its own, keyed once: AES runs in ECB mode on single
+    * blocks, with CBC chaining and PKCS7 padding done by hand in the token
+    * buffer, and `Mac.doFinal` leaves the MAC keyed for the next token. IVs
+    * come from a private DRBG (no lock shared with other threads), drawn
+    * 4 KB at a time; each 16-byte slice is handed out once.
+    */
+  private final class Kernel(key: Array[Byte]) {
+    private val aesKey = new SecretKeySpec(key, 16, 16, "AES")
+    private val enc = Cipher.getInstance("AES/ECB/NoPadding")
+    enc.init(Cipher.ENCRYPT_MODE, aesKey)
+    private val dec = Cipher.getInstance("AES/ECB/NoPadding")
+    dec.init(Cipher.DECRYPT_MODE, aesKey)
+    private val mac = Mac.getInstance("HmacSHA256")
+    mac.init(new SecretKeySpec(key, 0, 16, "HmacSHA256"))
+    private val rng = SecureRandom.getInstance("DRBG")
+    private val block = new Array[Byte](Block)
+    private val tag = new Array[Byte](Tag)
+
+    val ivs = new Array[Byte](4096)
+    private var ivPos = ivs.length
+
+    /** Offset in `ivs` of a fresh IV. */
+    def nextIv(): Int = {
+      if (ivPos == ivs.length) { rng.nextBytes(ivs); ivPos = 0 }
+      ivPos += Block
+      ivPos - Block
+    }
+
+    /** The token for `pt` at `ts` with the IV at `iv(ivOff)`, built in one
+      * array: 0x80 || ts || iv || ct || hmac, base64url-encoded once.
+      */
+    def seal(pt: Array[Byte], ts: Long, iv: Array[Byte], ivOff: Int): String = {
+      val ctLen = (pt.length / Block + 1) * Block
+      val tok = new Array[Byte](Header + ctLen + Tag)
+      tok(0) = 0x80.toByte
+      var i = 0
+      while (i < 8) { tok(1 + i) = (ts >>> (56 - 8 * i)).toByte; i += 1 }
+      System.arraycopy(iv, ivOff, tok, 9, Block)
+      val pad = (ctLen - pt.length).toByte
+      var off = Header
+      while (off < Header + ctLen) {
+        // block = (plaintext || PKCS7 pad)[off..] xor the previous ciphertext block (the IV first)
+        i = 0
+        while (i < Block) {
+          val p = off - Header + i
+          block(i) = ((if (p < pt.length) pt(p) else pad) ^ tok(off - Block + i)).toByte
+          i += 1
+        }
+        enc.update(block, 0, Block, tok, off)
+        off += Block
+      }
+      mac.update(tok, 0, Header + ctLen)
+      mac.doFinal(tok, Header + ctLen)
+      encodeB64Url(tok)
+    }
+
+    /** Verify the HMAC of a raw token, then CBC-decrypt and unpad it. */
+    def open(raw: Array[Byte]): Array[Byte] = {
+      require(raw.length >= Header + Block + Tag, "Fernet token too short")
+      require(raw(0) == 0x80.toByte, "Unsupported Fernet token version")
+      val ctLen = raw.length - Header - Tag
+      require(ctLen % Block == 0, "Fernet ciphertext is not whole blocks")
+      mac.update(raw, 0, Header + ctLen)
+      mac.doFinal(tag, 0)
+      var diff = 0
+      var i = 0
+      while (i < Tag) { diff |= tag(i) ^ raw(Header + ctLen + i); i += 1 }
+      require(diff == 0, "Fernet HMAC verification failed")
+      val out = dec.doFinal(raw, Header, ctLen)
+      i = 0
+      while (i < ctLen) { out(i) = (out(i) ^ raw(9 + i)).toByte; i += 1 }
+      val pad = out(ctLen - 1)
+      require(pad >= 1 && pad <= Block &&
+        (ctLen - pad until ctLen).forall(out(_) == pad), "Fernet padding invalid")
+      java.util.Arrays.copyOf(out, ctLen - pad)
+    }
+  }
 }

@@ -4,7 +4,8 @@ import graft.core.Utils
 import graft.crypto.CryptoFunctions
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import java.nio.file.{Files, Paths}
 import scala.concurrent.duration.Duration
@@ -20,6 +21,11 @@ final case class IngestOptions(
     header: Boolean = true,
     tableName: Option[String] = None)
 
+/** One ingested file: its input, the qualified table it went to, and
+  * `rows`, the number of rows THIS call wrote (counted by the write itself,
+  * not by re-reading the table). Under `SaveMode.Overwrite` that is the
+  * table's row count; under `Append` it excludes rows already there.
+  */
 final case class IngestResult(url: String, table: String, rows: Long)
 
 /** CSV → warehouse-table ingest, the reference pipeline's end-to-end job
@@ -68,26 +74,38 @@ object Ingest extends Logging {
         .option("inferSchema", "true") // single pass over the whole input
         .csv(path)
 
+    val anonymize = options.anonymize && options.sensitiveColumns.nonEmpty
     val df =
-      if (options.anonymize && options.sensitiveColumns.nonEmpty) {
+      if (anonymize) {
         val key = encryptionKey.getOrElse(graft.crypto.Fernet.generateKey())
         CryptoFunctions.encryptColumns(raw, options.sensitiveColumns, key)
       } else raw
+    val encrypted = if (anonymize) options.sensitiveColumns.filter(raw.columns.contains) else Nil
 
-    val qualified = saveToWarehouse(spark, df, source, table, mode)
-    IngestResult(path, qualified, spark.table(qualified).count())
+    // the write counts its own rows: no second read of the table
+    val written = Observation()
+    val qualified = saveToWarehouse(spark, df.observe(written, count(lit(1)).as("rows")),
+      source, table, mode, encrypted)
+    IngestResult(path, qualified, written.get("rows").asInstanceOf[Long])
   }
 
   /** `CREATE DATABASE IF NOT EXISTS source` + `saveAsTable(source.table)` —
     * the namespace-qualification step the reference does by rewriting SQL
     * text (/root/reference/pipeline.py:235-243), done through the catalog.
+    *
+    * `encrypted` names the Fernet-token columns. Tokens are unique by
+    * construction (random IV), so parquet's dictionary attempt on them is
+    * always wasted work; those columns are written without one.
     */
   def saveToWarehouse(spark: SparkSession, df: DataFrame, source: String,
-                      table: String, mode: SaveMode): String = {
+                      table: String, mode: SaveMode,
+                      encrypted: Seq[String] = Nil): String = {
     val db = Utils.sanitizeTableName(source + ".x") // sanitize, keep name rules uniform
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
     val qualified = s"`$db`.`$table`"
-    df.write.mode(mode).saveAsTable(qualified)
+    encrypted.foldLeft(df.write.mode(mode)) { (w, c) =>
+      w.option(s"parquet.enable.dictionary#$c", "false")
+    }.saveAsTable(qualified)
     s"$db.$table"
   }
 

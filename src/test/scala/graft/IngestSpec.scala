@@ -4,6 +4,10 @@ import graft.etl.{Ingest, IngestOptions}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import scala.concurrent.duration._
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.jdk.CollectionConverters._
 
 /** End-to-end ingest slice: CSV on disk → inferred schema → (encrypted) →
   * managed warehouse table, the reference pipeline's whole job
@@ -119,5 +123,73 @@ class IngestSpec extends SparkSuite {
     val e = intercept[UnsupportedOperationException](
       Ingest.ingestFile(spark, "/tmp/nope.xls", "x"))
     assert(e.getMessage.contains("BIFF"))
+  }
+
+  // --- IngestResult.rows is counted by the write itself (no re-read)
+
+  test("rows: an encrypted Overwrite ingest reports the table's row count") {
+    val path = writeCsv("enc_rows.csv", Seq("name,city") ++ (1 to 50).map(i => s"n$i,c${i % 3}"))
+    val res = Ingest.ingestFile(spark, path, "rowsrc1",
+      IngestOptions(anonymize = true, sensitiveColumns = Seq("name")),
+      encryptionKey = Some(graft.crypto.Fernet.generateKey()))
+    assert(res.rows == 50)
+    assert(res.rows == spark.table(res.table).count())
+    spark.sql("DROP DATABASE rowsrc1 CASCADE")
+  }
+
+  test("rows: in Append the second file reports only its own rows") {
+    val p1 = writeCsv("app.csv", Seq("a,b", "1,x"))
+    val p2 = writeCsv("app.csv", Seq("a,b", "2,y"))
+    val opts = IngestOptions(tableName = Some("app"))
+    assert(Ingest.ingestFile(spark, p1, "rowsrc2", opts).rows == 1)
+    val second = Ingest.ingestFile(spark, p2, "rowsrc2", opts,
+      mode = org.apache.spark.sql.SaveMode.Append)
+    assert(second.rows == 1)
+    assert(spark.table("rowsrc2.app").count() == 2)
+    spark.sql("DROP DATABASE rowsrc2 CASCADE")
+  }
+
+  test("rows: a header-only CSV reports 0 and does not hang") {
+    val path = writeCsv("empty.csv", Seq("a,b"))
+    // a row-count observation that never fired would block forever
+    val res = Await.result(Future(Ingest.ingestFile(spark, path, "rowsrc3")), 2.minutes)
+    assert(res.rows == 0)
+    assert(spark.table(res.table).count() == 0)
+    spark.sql("DROP DATABASE rowsrc3 CASCADE")
+  }
+
+  /** Column path -> whether any of its chunks in the table's parquet files
+    * is dictionary-encoded, read from the file footers. */
+  private def dictionaryColumns(table: String): Map[String, Boolean] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val files = spark.table(table).inputFiles.toSeq
+    assert(files.nonEmpty)
+    files.flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala).map { c =>
+        c.getPath.toDotString -> c.getEncodings.asScala.exists(_.usesDictionary)
+      } finally reader.close()
+    }.groupMapReduce(_._1)(_._2)(_ || _)
+  }
+
+  test("parquet footer: Fernet columns carry no dictionary, a plaintext column does") {
+    val path = writeCsv("dict.csv", Seq("name,email,city") ++
+      (1 to 500).map(i => s"n$i,e$i@x.org,${Seq("Oslo", "Lima")(i % 2)}"))
+    val res = Ingest.ingestFile(spark, path, "dictsrc",
+      IngestOptions(anonymize = true, sensitiveColumns = Seq("name", "email")),
+      encryptionKey = Some(graft.crypto.Fernet.generateKey()))
+    val dict = dictionaryColumns(res.table)
+    assert(dict == Map("name" -> false, "email" -> false, "city" -> true))
+    // the switch itself: a low-cardinality column named as encrypted is
+    // written without a dictionary, while its twin keeps one
+    val twins = spark.range(500).selectExpr("if(id % 2 = 0, 'Oslo', 'Lima') as a",
+      "if(id % 2 = 0, 'Oslo', 'Lima') as b")
+    val t = Ingest.saveToWarehouse(spark, twins, "dictsrc", "twins",
+      org.apache.spark.sql.SaveMode.Overwrite, encrypted = Seq("a"))
+    assert(dictionaryColumns(t) == Map("a" -> false, "b" -> true))
+    spark.sql("DROP DATABASE dictsrc CASCADE")
   }
 }
